@@ -105,7 +105,8 @@ def format_stdout_line(
        way when the r14 registry grew 108->111);
     3. drop the informational n_queries/queries_omitted keys;
     4. only then, as a last resort, evict protected tail entries — an
-       unparseable line loses every median, not just the tail.
+       unparseable line loses every median, not just the tail — and
+       put ``queries_omitted`` back, so the line still says so.
     """
     out = {
         "metric": "total_query_seconds",
@@ -145,8 +146,9 @@ def format_stdout_line(
         while len(line) > budget and names:
             kept.pop(names.pop())
             out["queries"] = kept
-            if "n_queries" in out:
-                out["queries_omitted"] = len(timings) - len(kept)
+            # the omission marker survives every stage: stage 3 drops
+            # it for room, a protected eviction puts it back
+            out["queries_omitted"] = len(timings) - len(kept)
             line = json.dumps(out, separators=(",", ":"))
     print(
         f"# stdout queries map holds {len(kept)} of {len(timings)} "

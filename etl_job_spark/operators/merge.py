@@ -34,60 +34,35 @@ from collections.abc import Mapping, Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from etl_job_spark.sql import _qualifier, _sub_outside_spans
+
 #: prefix under which the joined-row namespace exposes source columns to
 #: expression-mode ``update_cols`` (``source.c`` in user SQL → this)
 _SRC = "__src_"
 
 
 def _rewrite_source_refs(expr: str, source_cols: Sequence[str]) -> str:
-    """Rewrite ``source.<col>`` qualifiers (outside string literals) to
-    the joined-row namespace (``__src_<col>``); raise if a referenced
-    source column doesn't exist. Bare names stay bare — they resolve to
-    TARGET columns after the marker join."""
-    out: list[str] = []
-    quote: str | None = None
-    i = 0
-    low = expr.lower()
-    while i < len(expr):
-        c = expr[i]
-        if quote is not None:
-            out.append(c)
-            if c == quote:
-                quote = None
-            i += 1
-            continue
-        if c in ("'", '"'):
-            quote = c
-            out.append(c)
-            i += 1
-            continue
-        if (
-            low.startswith("source.", i)
-            and (i == 0 or not (expr[i - 1].isalnum() or expr[i - 1] == "_"))
-        ):
-            m = re.match(r"source\.(\w+)", expr[i:], re.IGNORECASE)
-            # membership is case-insensitive (Spark resolves column
-            # names case-insensitively; source.C must find column c) —
-            # the rewrite uses the ACTUAL source column's spelling, the
-            # name the joined-frame alias carries
-            actual = None
-            if m is not None:
-                want = m.group(1).casefold()
-                actual = next(
-                    (c for c in source_cols if c.casefold() == want), None
-                )
-            if actual is None:
-                raise ValueError(
-                    f"update expression {expr.strip()!r} references "
-                    f"source.{m.group(1) if m else '?'} which is not a "
-                    f"source column (have {sorted(source_cols)})"
-                )
-            out.append(_SRC + actual)
-            i += len(m.group(0))
-            continue
-        out.append(c)
-        i += 1
-    return "".join(out)
+    """Rewrite ``source.<col>`` qualifiers (outside SQL literals,
+    comments and backticked names) to the joined-row namespace
+    (``__src_<col>``); raise if a referenced source column doesn't
+    exist. Bare names stay bare — they resolve to TARGET columns after
+    the marker join."""
+    def _ref(m: re.Match) -> str:
+        # membership is case-insensitive (Spark resolves column names
+        # case-insensitively; source.C must find column c) — the
+        # rewrite uses the ACTUAL source column's spelling, the name
+        # the joined-frame alias carries
+        want = m.group(2).casefold()
+        actual = next((c for c in source_cols if c.casefold() == want), None)
+        if not want or actual is None:
+            raise ValueError(
+                f"update expression {expr.strip()!r} references "
+                f"source.{m.group(2) or '?'} which is not a "
+                f"source column (have {sorted(source_cols)})"
+            )
+        return _SRC + actual
+
+    return _sub_outside_spans(_qualifier("source") + r"(\w*)", _ref, expr)
 
 
 def dedup_last_writer(source: DataFrame, keys: Sequence[str], order_col: str) -> DataFrame:
@@ -144,35 +119,11 @@ def merge_upsert(
 
 
 def _strip_source_qualifier(expr: str) -> str:
-    """Rewrite ``source.<col>`` → ``<col>`` outside string literals —
-    for predicates evaluated directly over a bare SOURCE-row frame
-    (the insert condition), where columns keep their own names."""
-    out: list[str] = []
-    quote: str | None = None
-    i = 0
-    low = expr.lower()
-    while i < len(expr):
-        c = expr[i]
-        if quote is not None:
-            out.append(c)
-            if c == quote:
-                quote = None
-            i += 1
-            continue
-        if c in ("'", '"'):
-            quote = c
-            out.append(c)
-            i += 1
-            continue
-        if (
-            low.startswith("source.", i)
-            and (i == 0 or not (expr[i - 1].isalnum() or expr[i - 1] == "_"))
-        ):
-            i += len("source.")
-            continue
-        out.append(c)
-        i += 1
-    return "".join(out)
+    """Rewrite ``source.<col>`` → ``<col>`` outside SQL literals,
+    comments and backticked names — for predicates evaluated directly
+    over a bare SOURCE-row frame (the insert condition), where columns
+    keep their own names."""
+    return _sub_outside_spans(_qualifier("source"), lambda m: "", expr)
 
 
 def merge_clauses(

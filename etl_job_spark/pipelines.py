@@ -93,13 +93,16 @@ def _iso_day(col: str) -> F.Column:
     mart row (allocation-heavy, ~10-100x the substring cost — guide
     §1.2 per-task work); the surgery is three codegen'd byte ops.
     NULL propagates identically (concat of NULL substrings is NULL).
-    Guarded (ADVICE r14): a non-8-digit value — possible on staging
-    tables landed by external writers — yields NULL exactly like the
-    to_date round-trip did, instead of a garbage fragment."""
+    Guarded: a value that is not exactly eight ASCII digits — possible
+    on staging tables landed by external writers — yields NULL (so
+    ``'2024ABCD'`` and ``'2024-1-1'`` are NULL, never a garbage
+    fragment). Calendar validity is NOT checked: ``'20241399'`` passes
+    the guard and becomes ``'2024-13-99'``, where the to_date
+    round-trip gave NULL."""
     s = F.col(col)
     # F.concat (not concat_ws): concat propagates NULL, concat_ws skips it
     return F.when(
-        F.length(s) == 8,
+        s.rlike("^[0-9]{8}$"),
         F.concat(
             F.substring(s, 1, 4), F.lit("-"), F.substring(s, 5, 2), F.lit("-"), F.substring(s, 7, 2)
         ),

@@ -6,6 +6,9 @@ path — `spark.sql` over the same data, same Catalyst plans).
 
 from __future__ import annotations
 
+import re
+from itertools import accumulate, repeat
+
 from pyspark.sql import DataFrame, SparkSession
 
 from etl_job_spark.sources.catalog import TABLE_NAMES, load_table
@@ -36,103 +39,142 @@ def run_sql(spark: SparkSession, sf_dir: str, sql: str) -> DataFrame:
 #
 # The SET expressions and the predicate are passed to Spark SQL
 # unmodified (full expression language); only the statement SHAPE is
-# parsed here, with a quote/paren-aware scanner so commas inside
-# function calls and keywords inside string literals don't confuse the
-# split. Anything else (MERGE INTO, multi-table UPDATE, subqueries in
-# SET) raises with the supported forms named — use the library verbs.
+# parsed here. Every scanner reads the statement through ONE lexer
+# (``_SQL_SPAN`` below): string literals, backticked-identifier
+# content and comments are spans no keyword, comma, paren, semicolon
+# or alias qualifier inside can match. Anything else (multi-table
+# UPDATE, subqueries in SET) raises with the supported forms named —
+# use the library verbs.
 # ---------------------------------------------------------------------
+
+# The SQL lexer: one match per span, left to right. Quoted literals
+# take '' / "" doubled-quote escapes and Spark's DEFAULT backslash
+# escapes (``spark.sql.parser.escapedStringLiterals=false``: ``\``
+# escapes the next character, so ``'don\'t'`` is ONE literal; legacy
+# escapedStringLiterals=true sessions are not supported by the routed
+# SQL surface — use doubled-quote escapes there). Backticked names
+# have no escapes. ``--`` runs to the end of the line (the newline
+# stays outside), ``/* */`` to its first closer. An unterminated span
+# runs to the end of the text. Possessive repeats: an unterminated
+# literal never backtracks into a shorter, closed one.
+_SQL_SPAN = re.compile(
+    r"""'(?:\\.|''|[^'\\])*+(?:'|\\?\Z)"""
+    r"""|"(?:\\.|""|[^"\\])*+(?:"|\\?\Z)"""
+    r"|`[^`]*+`?|--[^\n]*+|/\*.*?(?:\*/|\Z)",
+    re.S,
+)
+_PAREN_STEP = {"(": 1, ")": -1}
+
+
+def _sql_spans(s: str) -> list[tuple[int, int]]:
+    """``[start, end)`` of every lexer span of ``s`` — a backticked
+    name's span is its CONTENT (the backticks stay outside, so a
+    scanner still sees an identifier there)."""
+    out = []
+    for m in _SQL_SPAN.finditer(s):
+        a, b = m.span()
+        if s[a] == "`":
+            closed = b - a >= 2 and s[b - 1] == "`"
+            a, b = a + 1, b - closed
+        out.append((a, b))
+    return out
+
+
+def _splice(text: str, edits) -> str:
+    """``text`` with each ``(start, end, replacement)`` of ``edits``
+    (ascending, non-overlapping) spliced in."""
+    out: list[str] = []
+    pos = 0
+    for a, b, new in edits:
+        out += (text[pos:a], new)
+        pos = b
+    out.append(text[pos:])
+    return "".join(out)
+
+
+def _mask_sql_spans(s: str) -> tuple[str, list[str]]:
+    """Replace every lexer span with a ``\\x00L<i>\\x00`` placeholder
+    token, returning the masked text and the span list — for rewrites
+    that change the text's length (the FROM/JOIN rewriter), which
+    ``_restore_sql_spans`` then undoes byte-exactly (a quoted literal
+    containing ``FROM sales`` comes back exactly as written; VERDICT
+    r12 Wrong #1). Backticked names keep their backticks in the masked
+    text, so ``FROM `weird name``` still parses as a table reference."""
+    spans: list[str] = []
+
+    def push(a: int, b: int) -> str:
+        spans.append(s[a:b])
+        return f"\x00L{len(spans) - 1}\x00"
+
+    return _splice(s, ((a, b, push(a, b)) for a, b in _sql_spans(s))), spans
+
+
+def _restore_sql_spans(text: str, spans: list[str]) -> str:
+    return re.sub(
+        "\x00L(\\d+)\x00", lambda m: spans[int(m.group(1))], text
+    )
+
+
+def _sql_view(s: str) -> tuple[str, list[int]]:
+    """``s`` with every lexer span blanked to spaces (same length, so
+    an offset found in the view slices or edits ``s`` directly), and
+    ``depth[i]``: the paren depth at offset ``i`` counted over the
+    view (an opening paren sits at its outer depth; ``depth[len(s)]``
+    is the final depth)."""
+    view = _splice(s, ((a, b, " " * (b - a)) for a, b in _sql_spans(s)))
+    return view, [0, *accumulate(map(_PAREN_STEP.get, view, repeat(0)))]
+
+
+def _sub_outside_spans(pattern: str, repl, text: str) -> str:
+    """``re.sub(pattern, repl, text)`` where matches are found in the
+    lexer view — never inside a literal, comment or backticked name —
+    and replaced in ``text``. ``repl(m)`` sees the view's match; the
+    patterns used here match no space, so its text is the original's."""
+    view, _ = _sql_view(text)
+    return _splice(
+        text, ((m.start(), m.end(), repl(m)) for m in re.finditer(pattern, view))
+    )
+
+
+def _top_level_hits(sql: str, word: str) -> list[int]:
+    """Offsets of keyword ``word`` (case-insensitive, whole word) at
+    paren depth 0 outside every lexer span."""
+    view, depth = _sql_view(sql)
+    pat = rf"(?i)(?<!\w){re.escape(word)}(?!\w)"
+    return [m.start() for m in re.finditer(pat, view) if depth[m.start()] == 0]
 
 
 def _scan_top(sql: str, word: str) -> int:
-    """Index of the first occurrence of keyword ``word`` at paren
-    depth 0, outside single/double-quoted literals; -1 if absent.
+    """Index of the first top-level occurrence of keyword ``word``
+    (``_top_level_hits``); -1 if absent."""
+    hits = _top_level_hits(sql, word)
+    return hits[0] if hits else -1
 
-    Backtick-quoted identifiers and SQL comments are SKIPPED (r14 —
-    previously documented limits; a quote inside a comment
-    (``-- don't``) or a backticked name (`` `it's` ``) must not
-    poison the quote state, and a keyword inside either never
-    matches), converging every scanner on the masker's span
-    semantics (property-tested against it in test_mask_property.py).
 
-    Escape semantics match Spark's DEFAULT lexer
-    (``spark.sql.parser.escapedStringLiterals=false``): inside a
-    quoted literal ``\\`` escapes the next character, so ``'don\\'t'``
-    is ONE literal (VERDICT r13 Wrong #1). Sessions that flip
-    escapedStringLiterals=true (legacy Hive mode, where backslash is a
-    plain character) are NOT supported by the routed SQL surface —
-    use doubled-quote escapes there."""
-    depth = 0
-    quote: str | None = None
-    upper = sql.upper()
-    w = word.upper()
-    i = 0
-    while i < len(sql):
-        c = sql[i]
-        if quote is not None:
-            if quote != "`" and c == "\\":  # escape — next char literal
-                i += 2
-                continue
-            if c == quote:
-                quote = None
-            i += 1
-            continue
-        if c == "-" and sql.startswith("--", i):
-            j = sql.find("\n", i)
-            i = j + 1 if j >= 0 else len(sql)
-            continue
-        if c == "/" and sql.startswith("/*", i):
-            j = sql.find("*/", i + 2)
-            i = j + 2 if j >= 0 else len(sql)
-            continue
-        if c in ("'", '"', "`"):
-            quote = c
-        elif c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-        elif depth == 0 and upper.startswith(w, i):
-            before_ok = i == 0 or not (sql[i - 1].isalnum() or sql[i - 1] == "_")
-            j = i + len(w)
-            after_ok = j >= len(sql) or not (sql[j].isalnum() or sql[j] == "_")
-            if before_ok and after_ok:
-                return i
-        i += 1
-    return -1
+def _split_top_level(text: str, word: str) -> list[str]:
+    """Split ``text`` on every top-level occurrence of keyword
+    ``word`` (``_top_level_hits``)."""
+    return _split_at(text, _top_level_hits(text, word), len(word))
+
+
+def _split_at(text: str, cuts: list[int], width: int = 1) -> list[str]:
+    """``text`` cut at each offset in ``cuts`` (ascending), dropping the
+    ``width`` characters found there."""
+    starts = [0, *(c + width for c in cuts)]
+    return [text[a:b] for a, b in zip(starts, [*cuts, len(text)])]
 
 
 def _split_assignments(body: str) -> dict[str, str]:
     """``a = e1, b = e2`` → {a: e1, b: e2}; commas split only at paren
-    depth 0 outside quotes, the column name is the text before each
-    item's FIRST top-level '='."""
-    items: list[str] = []
-    depth = 0
-    quote: str | None = None
-    esc = False  # previous in-quote char was a backslash
-    start = 0
-    for i, c in enumerate(body):
-        if quote is not None:
-            if esc:
-                esc = False
-            elif c == "\\":
-                esc = True
-            elif c == quote:
-                quote = None
-            continue
-        if c in ("'", '"'):
-            quote = c
-        elif c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-        elif c == "," and depth == 0:
-            items.append(body[start:i])
-            start = i + 1
-    items.append(body[start:])
+    depth 0 outside lexer spans, the column name is the text before
+    each item's FIRST '=' outside a span."""
+    view, depth = _sql_view(body)
+    cuts = [i for i, c in enumerate(view) if c == "," and depth[i] == 0]
     out: dict[str, str] = {}
-    for item in items:
+    for item, item_view in zip(_split_at(body, cuts), _split_at(view, cuts)):
         # the assignment '=' is always the item's first '=' (the column
         # name cannot contain one; expression '='s come after)
-        eq = item.find("=")
+        eq = item_view.find("=")
         if eq <= 0:
             raise ValueError(f"SET item {item.strip()!r}: expected col = expr")
         col = item[:eq].strip()
@@ -238,17 +280,8 @@ def _parse_spec_predicate(pred: str) -> list[tuple]:
 
     # split on top-level AND, re-joining the AND that belongs to a
     # BETWEEN (its lower bound ends the previous part)
-    parts: list[str] = []
-    rest = pred.strip()
-    while True:
-        at = _scan_top(rest, "AND")
-        if at < 0:
-            parts.append(rest)
-            break
-        parts.append(rest[:at])
-        rest = rest[at + 3:]
     terms: list[str] = []
-    for p in parts:
+    for p in _split_top_level(pred.strip(), "AND"):
         if terms and re.search(r"(?is)\bBETWEEN\s+\S+\s*$", terms[-1]):
             terms[-1] += " AND " + p  # the BETWEEN's own AND
         else:
@@ -296,111 +329,62 @@ def _parse_spec_predicate(pred: str) -> list[tuple]:
     return spec
 
 
+def _qualifier(*names: str) -> str:
+    """Pattern for a ``<name>.`` qualifier (any of ``names``,
+    case-insensitive) that starts a word; group 1 is the name."""
+    alts = "|".join(re.escape(n) for n in names if n)
+    return rf"(?i)(?<!\w)({alts})\."
+
+
 def _strip_alias(expr: str, alias: str, other: str | None, what: str) -> str:
-    """Remove ``alias.`` qualifiers outside quotes; refuse if the
+    """Remove ``alias.`` qualifiers outside lexer spans; refuse if the
     OTHER relation's alias is still referenced (the clause's contract
     allows one side only)."""
-    out = []
-    quote: str | None = None
-    i = 0
-    low = expr.lower()
-    while i < len(expr):
-        c = expr[i]
-        if quote is not None:
-            if c == "\\" and i + 1 < len(expr):  # escaped char stays verbatim
-                out.append(expr[i : i + 2])
-                i += 2
-                continue
-            out.append(c)
-            if c == quote:
-                quote = None
-            i += 1
-            continue
-        if c in ("'", '"'):
-            quote = c
-            out.append(c)
-            i += 1
-            continue
-        for name, drop in ((alias, True), (other, False)):
-            if (
-                name
-                and low.startswith(name.lower() + ".", i)
-                and (i == 0 or not (expr[i - 1].isalnum() or expr[i - 1] == "_"))
-            ):
-                if not drop:
-                    raise ValueError(
-                        f"MERGE {what} predicate may reference only "
-                        f"{alias!r}-side columns, got {expr.strip()!r}"
-                    )
-                i += len(name) + 1
-                break
-        else:
-            out.append(c)
-            i += 1
-            continue
-    return "".join(out).strip()
+
+    def drop(m: re.Match) -> str:
+        if m.group(1).lower() != alias.lower():
+            raise ValueError(
+                f"MERGE {what} predicate may reference only "
+                f"{alias!r}-side columns, got {expr.strip()!r}"
+            )
+        return ""
+
+    return _sub_outside_spans(_qualifier(alias, other), drop, expr).strip()
 
 
 def _requalify_source(expr: str, s_alias: str, t_alias: str) -> str:
     """Rewrite ``<s_alias>.col`` → ``source.col`` (the namespace
     ``merge_clauses``' expression mode understands) and strip
     ``<t_alias>.`` qualifiers (bare names = target columns there);
-    quote-aware, leaves string literals alone."""
-    out: list[str] = []
-    quote: str | None = None
-    i = 0
-    low = expr.lower()
-    while i < len(expr):
-        c = expr[i]
-        if quote is not None:
-            if c == "\\" and i + 1 < len(expr):  # escaped char stays verbatim
-                out.append(expr[i : i + 2])
-                i += 2
-                continue
-            out.append(c)
-            if c == quote:
-                quote = None
-            i += 1
-            continue
-        if c in ("'", '"'):
-            quote = c
-            out.append(c)
-            i += 1
-            continue
-        boundary = i == 0 or not (expr[i - 1].isalnum() or expr[i - 1] == "_")
-        if boundary and low.startswith(s_alias.lower() + ".", i):
-            out.append("source.")
-            i += len(s_alias) + 1
-            continue
-        if boundary and low.startswith(t_alias.lower() + ".", i):
-            i += len(t_alias) + 1
-            continue
-        out.append(c)
-        i += 1
-    return "".join(out).strip()
+    outside lexer spans only."""
+    return _sub_outside_spans(
+        _qualifier(s_alias, t_alias),
+        lambda m: "source." if m.group(1).lower() == s_alias.lower() else "",
+        expr,
+    ).strip()
 
 
 def _parse_in_subquery(where_sql: str) -> tuple[str, bool, str] | None:
     """``<col> [NOT] IN (<SELECT/WITH …>)`` as the WHOLE WHERE clause →
     ``(col, negated, subquery_sql)``, else ``None`` (the caller keeps
     its plain-predicate route, which refuses subqueries loudly).
-    Masked-scan based, so a literal containing ``IN (SELECT`` can
-    never trigger the route; a conjunction around the subquery
+    Matched on the lexer view, so a literal containing ``IN (SELECT``
+    can never trigger the route; a conjunction around the subquery
     (``… AND x = 1``) deliberately does NOT match — that shape needs
     the library verbs."""
     import re
 
-    masked, spans = _mask_sql_spans(where_sql)
+    view, _ = _sql_view(where_sql)
     m = re.fullmatch(
         r"(?is)\s*(\w+)\s+(NOT\s+)?IN\s*\(\s*((?:SELECT|WITH)\b.*)\)\s*",
-        masked,
+        view,
     )
     if m is None:
         return None
     return (
         m.group(1),
         m.group(2) is not None,
-        _restore_sql_spans(m.group(3), spans).strip(),
+        where_sql[m.start(3):m.end(3)].strip(),
     )
 
 
@@ -922,7 +906,8 @@ def _merge_into(spark: SparkSession, t, s: str, resolve=None, explain=False):
     on_sql, clause_sql = rest[:first_when], rest[first_when:]
 
     keys = []
-    for part in re.split(r"(?i)\s+AND\s+", on_sql.strip()):
+    # parsed on the lexer view: a comment in the ON clause reads as space
+    for part in _split_top_level(_sql_view(on_sql)[0], "AND"):
         m = re.match(r"^\s*(\w+)\.(\w+)\s*=\s*(\w+)\.(\w+)\s*$", part)
         if m is None or {m.group(1), m.group(3)} != {t_alias, s_alias} or (
             m.group(2) != m.group(4)
@@ -937,18 +922,7 @@ def _merge_into(spark: SparkSession, t, s: str, resolve=None, explain=False):
     # split on top-level WHEN only (quote/paren-aware): a CASE WHEN
     # inside a clause predicate is supported by parenthesizing the
     # predicate — inside parens the scanner never matches
-    clauses = []
-    remaining = clause_sql
-    while True:
-        at = _scan_top(remaining, "WHEN")
-        if at < 0:
-            break
-        nxt = _scan_top(remaining[at + 4:], "WHEN")
-        if nxt < 0:
-            clauses.append(remaining[at + 4:])
-            break
-        clauses.append(remaining[at + 4: at + 4 + nxt])
-        remaining = remaining[at + 4 + nxt:]
+    clauses = _split_top_level(clause_sql, "WHEN")[1:]
 
     update_cols: list[str] | dict[str, str] | None = None
     delete_pred = None
@@ -2200,79 +2174,6 @@ def statement_table(sql: str) -> str:
     return name.split(".")[-1].split("/")[-1]
 
 
-def _mask_sql_spans(s: str) -> tuple[str, list[str]]:
-    """Replace every span the FROM/JOIN rewriter must not look inside
-    — single/double-quoted string literals ('' / "" escapes), SQL
-    comments (``--`` to end of line, ``/* */``), and backtick-quoted
-    identifiers — with ``\\x00L<i>\\x00`` placeholder tokens, returning
-    the masked text and the span list. Backticked spans keep their
-    surrounding backticks in the masked text (only the CONTENT is
-    masked), so ``FROM `weird name``` still parses as a backticked
-    table reference while a backticked identifier whose content
-    happens to contain ``FROM``/``JOIN`` can never fire the rewrite.
-    ``_restore`` is ``re.sub`` of the token back to ``spans[i]`` —
-    byte-preserving (a quoted literal containing ``FROM sales`` comes
-    back exactly as written; VERDICT r12 Wrong #1)."""
-    out: list[str] = []
-    spans: list[str] = []
-    i, n = 0, len(s)
-
-    def _push(text: str) -> str:
-        spans.append(text)
-        return f"\x00L{len(spans) - 1}\x00"
-
-    while i < n:
-        c = s[i]
-        if c in ("'", '"'):
-            j = i + 1
-            while j < n:
-                if s[j] == "\\":  # backslash escape (default lexer,
-                    j += 2        # escapedStringLiterals=false) — the
-                    continue      # next char can never close the span
-                if s[j] == c:
-                    if j + 1 < n and s[j + 1] == c:  # doubled-quote escape
-                        j += 2
-                        continue
-                    break
-                j += 1
-            end = j + 1 if j < n else n
-            out.append(_push(s[i:end]))
-            i = end
-        elif c == "`":
-            j = s.find("`", i + 1)
-            if j < 0:
-                # unterminated: mask the tail but never SYNTHESIZE a
-                # closing backtick the input didn't have (restoration
-                # must be byte-exact — property-tested)
-                out.append("`" + _push(s[i + 1 :]))
-                i = n
-            else:
-                out.append("`" + _push(s[i + 1 : j]) + "`")
-                i = j + 1
-        elif c == "-" and s.startswith("--", i):
-            j = s.find("\n", i)
-            end = j if j >= 0 else n  # the newline itself stays visible
-            out.append(_push(s[i:end]))
-            i = end
-        elif c == "/" and s.startswith("/*", i):
-            j = s.find("*/", i + 2)
-            end = j + 2 if j >= 0 else n
-            out.append(_push(s[i:end]))
-            i = end
-        else:
-            out.append(c)
-            i += 1
-    return "".join(out), spans
-
-
-def _restore_sql_spans(text: str, spans: list[str]) -> str:
-    import re
-
-    return re.sub(
-        "\x00L(\\d+)\x00", lambda m: spans[int(m.group(1))], text
-    )
-
-
 def _routed_select(spark: SparkSession, s: str, resolve) -> DataFrame:
     """Run one SELECT/WITH statement with table names resolved through
     ``resolve(name) -> ManifestTable | None`` — the TABLE, not a path,
@@ -2520,40 +2421,19 @@ def _routed_select(spark: SparkSession, s: str, resolve) -> DataFrame:
     return result
 
 
-def _split_top_level(text: str, word: str) -> list[str]:
-    """Split ``text`` on every depth-0, outside-quotes occurrence of
-    keyword ``word`` (via ``_scan_top``)."""
-    parts: list[str] = []
-    rest = text
-    while True:
-        at = _scan_top(rest, word)
-        if at < 0:
-            parts.append(rest)
-            return parts
-        parts.append(rest[:at])
-        rest = rest[at + len(word):]
-
-
 def _strip_enclosing_parens(text: str) -> str:
     """Remove parens that enclose the WHOLE expression (repeatedly):
     ``((k = 5))`` → ``k = 5``; ``(k < 2) AND (k > 0)`` is untouched
-    (the first paren closes before the end)."""
+    (the first paren closes before the end). Parens inside lexer spans
+    do not count."""
     t = text.strip()
-    while t.startswith("(") and t.endswith(")"):
-        depth = 0
-        enclosing = True
-        for i, c in enumerate(t):
-            if c == "(":
-                depth += 1
-            elif c == ")":
-                depth -= 1
-                if depth == 0 and i < len(t) - 1:
-                    enclosing = False
-                    break
-        if not enclosing:
+    while True:
+        view, depth = _sql_view(t)
+        if not (view.startswith("(") and view.endswith(")")):
+            return t
+        if min(depth[1:len(t)]) < 1:  # the first paren closes early
             return t
         t = t[1:-1].strip()
-    return t
 
 
 def _outer_where_specs(
@@ -3126,59 +3006,13 @@ def execute_sql_script(
 
 
 def _split_script(script: str) -> list[str]:
-    """Split on semicolons outside single/double-quoted literals,
-    backticked identifiers, and SQL comments (``\\``-escape aware,
-    matching the default lexer; backticks have no escapes — a doubled
-    backtick reads as close-then-reopen, which splits identically; a
-    ``;`` inside ``-- …`` or ``/* … */`` never splits, r14). Each
-    part's LEADING comments are stripped so a script may carry header
-    comments before its first verb; comments elsewhere inside DML
-    statements remain the scanners' documented limitation."""
-    import re
-
-    parts: list[str] = []
-    quote: str | None = None  # "'", '"', '`', '--', or '/*'
-    esc = False
-    start = 0
-    i = 0
-    n = len(script)
-    while i < n:
-        c = script[i]
-        if quote is not None:
-            if quote == "`":
-                if c == "`":
-                    quote = None
-            elif quote == "--":
-                if c == "\n":
-                    quote = None
-            elif quote == "/*":
-                if script.startswith("*/", i):
-                    quote = None
-                    i += 2
-                    continue
-            elif esc:
-                esc = False
-            elif c == "\\":
-                esc = True
-            elif c == quote:
-                quote = None
-        elif c == "`":
-            quote = c
-        elif c in ("'", '"'):
-            quote = c
-        elif script.startswith("--", i):
-            quote = "--"
-            i += 2
-            continue
-        elif script.startswith("/*", i):
-            quote = "/*"
-            i += 2
-            continue
-        elif c == ";":
-            parts.append(script[start:i])
-            start = i + 1
-        i += 1
-    parts.append(script[start:])
+    """Split on semicolons outside lexer spans (a ``;`` inside a
+    literal, a backticked name or a comment never splits). Each part's
+    LEADING comments are stripped so a script may carry header
+    comments before its first verb; comments elsewhere stay in the
+    statement, where every scanner reads past them."""
+    view, _ = _sql_view(script)
+    parts = _split_at(script, [i for i, c in enumerate(view) if c == ";"])
 
     def _strip_leading_comments(p: str) -> str:
         prev = None

@@ -19,6 +19,9 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 #
 #   SPARK_GRAFT_RUN_SLOW=1 python -m pytest tests/
 #
+# or name one by node id (python -m pytest tests/test_x.py::test_y).
+# tests/test_slow_tier.py checks that every key names a real test.
+#
 # Durations source: /tmp full-suite run 2026-08-18 (pytest
 # --durations); re-measure before editing this list.
 # ---------------------------------------------------------------------
@@ -208,14 +211,23 @@ def pytest_collection_modifyitems(config, items):
     skip = pytest.mark.skip(
         reason="slow tier — opt in with SPARK_GRAFT_RUN_SLOW=1"
     )
+    # a test named by node id on the command line runs even when slow:
+    # asking for it by name is opting in
+    explicit = {_slow_key(a) for a in config.args if "::" in a}
     for item in items:
-        # nodeid: tests/test_x.py::test_y[param] -> test_x.py::test_y
-        base = item.nodeid.split("::", 1)
-        if len(base) != 2:
-            continue
-        key = os.path.basename(base[0]) + "::" + base[1].split("[")[0]
-        if key in SLOW_TIER:
+        key = _slow_key(item.nodeid)
+        if key in SLOW_TIER and key not in explicit:
             item.add_marker(skip)
+
+
+def _slow_key(nodeid: str) -> str | None:
+    """``tests/test_x.py::test_y[param]`` → ``test_x.py::test_y`` (the
+    SLOW_TIER key form); None for a node id without a function."""
+    base = nodeid.split("::", 1)
+    if len(base) != 2:
+        return None
+    return os.path.basename(base[0]) + "::" + base[1].split("[")[0]
+
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 _TESTS = os.path.join(_REPO, "tests")

@@ -66,3 +66,15 @@ def test_small_registry_keeps_full_precision():
     assert parsed["metric"] == "total_query_seconds"
     assert parsed["unit"] == "sec"
     assert parsed["sf"] == 0.01
+
+
+def test_protected_eviction_keeps_the_omission_marker():
+    # a budget too small for the protected set forces the last-resort
+    # stage, which runs after n_queries/queries_omitted were dropped;
+    # the line must still say that medians are missing
+    timings = {name: 1.5 for name in sorted(bench.PRINTED_CONTRACT)}
+    line = bench.format_stdout_line(timings, sum(timings.values()), 0.1, budget=400)
+    parsed = json.loads(line)
+    assert len(line) <= 400
+    assert "n_queries" not in parsed
+    assert parsed["queries_omitted"] == len(timings) - len(parsed["queries"]) > 0

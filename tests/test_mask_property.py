@@ -34,15 +34,18 @@ fragment = st.sampled_from(
 )
 statement = st.lists(fragment, min_size=0, max_size=25).map("".join)
 
+# pure Python: thousands of examples cost seconds
+EXAMPLES = 3000
 
-@settings(max_examples=300, deadline=None)
+
+@settings(max_examples=EXAMPLES, deadline=None)
 @given(statement)
 def test_mask_restore_roundtrip_is_byte_exact(s):
     masked, spans = _mask_sql_spans(s)
     assert _restore_sql_spans(masked, spans) == s
 
 
-@settings(max_examples=300, deadline=None)
+@settings(max_examples=EXAMPLES, deadline=None)
 @given(statement)
 def test_masked_text_exposes_no_span_content(s):
     masked, spans = _mask_sql_spans(s)
@@ -60,7 +63,7 @@ def test_masked_text_exposes_no_span_content(s):
     assert "--" not in re.sub("\x00L\\d+\x00", "", masked)
 
 
-@settings(max_examples=300, deadline=None)
+@settings(max_examples=EXAMPLES, deadline=None)
 @given(statement)
 def test_placeholders_are_well_formed_and_ordered(s):
     masked, spans = _mask_sql_spans(s)
@@ -99,7 +102,7 @@ def _outside_span_positions(s: str) -> set[int]:
     return outside
 
 
-@settings(max_examples=300, deadline=None)
+@settings(max_examples=EXAMPLES, deadline=None)
 @given(statement)
 def test_scan_top_never_hits_inside_any_span(s):
     outside = _outside_span_positions(s)
@@ -110,7 +113,7 @@ def test_scan_top_never_hits_inside_any_span(s):
             assert s[at:at + len(kw)].upper() == kw
 
 
-@settings(max_examples=300, deadline=None)
+@settings(max_examples=EXAMPLES, deadline=None)
 @given(statement)
 def test_split_script_agrees_with_the_mask_oracle(s):
     # the split points must be exactly the masked text's semicolons —
@@ -152,6 +155,10 @@ assign_fragment = st.sampled_from(
         "a = 1", "b = 'x,y'", "c = 'don\\'t, stop'", "d = f(1, 2)",
         "e = 'it''s'", ", ", "g = ", "'lit,eral'", "(", ")", "h2",
         " = ", "\\", "+", "nested(f(x), ',')",
+        # backticked names and comments holding quotes, commas or
+        # '=', and \' escapes
+        "`it's`", "`a,b`", "`x=y`", "/* it's, */", "-- c, 'd\n", "\n",
+        "\\'", "'e\\',f'", "/*", "*/", "`",
     ]
 )
 assignment_text = st.lists(
@@ -159,7 +166,7 @@ assignment_text = st.lists(
 ).map("".join)
 
 
-@settings(max_examples=300, deadline=None)
+@settings(max_examples=EXAMPLES, deadline=None)
 @given(assignment_text)
 def test_split_assignments_commas_respect_spans(s):
     """Whenever _split_assignments parses, the split points must be
@@ -193,3 +200,123 @@ def test_split_assignments_refuses_duplicate_columns():
 
     with pytest.raises(ValueError, match="more than once"):
         _split_assignments("a = 1, a = 2")
+
+
+# -- the qualifier rewriters (sql._strip_alias / _requalify_source,
+# operators.merge._rewrite_source_refs / _strip_source_qualifier): an
+# alias/source-qualifier soup with every span kind. Oracle: the same
+# regex rewrite applied to the MASKED text, then restored — so a
+# rewrite can never land inside a span, and no qualifier outside one
+# is missed.
+
+from etl_job_spark.operators.merge import (
+    _SRC,
+    _rewrite_source_refs,
+    _strip_source_qualifier,
+)
+from etl_job_spark.sql import _requalify_source, _strip_alias
+
+qualified_fragment = st.sampled_from(
+    [
+        "t.", "s.", "source.", "T.x", "S.y", "SOURCE.a", "t.`x`", "x",
+        "ts.", "_s.", "s2.", "a", "b", " + ", " = ", ", ", "(", ")", ".",
+        "'t.x'", "'can\\'t source.a'", "'it''s s.b'", '"s.x"',
+        "`t.x`", "`s.x`", "`source.b`", "-- s.x, it's\n", "/* t.a */",
+        "'", "`", "\\", "\\'", "/*", "*/", "--", "\n", " ",
+    ]
+)
+qualified_text = st.lists(qualified_fragment, min_size=1, max_size=12).map(
+    "".join
+)
+
+
+def _masked_sub(pattern: str, repl, s: str) -> str:
+    masked, spans = _mask_sql_spans(s)
+    return _restore_sql_spans(re.sub(pattern, repl, masked), spans)
+
+
+def _outcome(fn, *args):
+    try:
+        return ("ok", fn(*args))
+    except ValueError as e:
+        return ("refused", str(e))
+
+
+@settings(max_examples=EXAMPLES, deadline=None)
+@given(qualified_text)
+def test_strip_alias_agrees_with_the_mask_oracle(s):
+    assert _strip_alias(s, "t", None, "SET") == _masked_sub(
+        r"(?i)(?<!\w)t\.", "", s
+    ).strip()
+    masked, _ = _mask_sql_spans(s)
+    other_side = re.search(r"(?i)(?<!\w)s\.", masked) is not None
+    assert (_outcome(_strip_alias, s, "t", "s", "SET")[0] == "refused") == (
+        other_side
+    )
+
+
+@settings(max_examples=EXAMPLES, deadline=None)
+@given(qualified_text)
+def test_requalify_source_agrees_with_the_mask_oracle(s):
+    want = _masked_sub(
+        r"(?i)(?<!\w)(s|t)\.",
+        lambda m: "source." if m.group(1).lower() == "s" else "",
+        s,
+    ).strip()
+    assert _requalify_source(s, "s", "t") == want
+
+
+@settings(max_examples=EXAMPLES, deadline=None)
+@given(qualified_text)
+def test_source_qualifier_rewrites_agree_with_the_mask_oracle(s):
+    assert _strip_source_qualifier(s) == _masked_sub(
+        r"(?i)(?<!\w)source\.", "", s
+    )
+    cols = ["a", "B"]
+
+    def ref(m):
+        hit = [c for c in cols if c.casefold() == m.group(1).casefold()]
+        if not hit:
+            raise ValueError("not a source column")
+        return _SRC + hit[0]
+
+    got = _outcome(_rewrite_source_refs, s, cols)
+    want = _outcome(_masked_sub, r"(?i)(?<!\w)source\.(\w*)", ref, s)
+    assert got[0] == want[0]
+    if got[0] == "ok":
+        assert got[1] == want[1]
+
+
+# -- pinned probes: a qualifier inside a literal or a backticked name
+# is never rewritten, and a backticked name or a comment holding a
+# quote never hides the comma that splits a SET list
+
+
+def test_rewrite_source_refs_leaves_escaped_literal_alone():
+    got = _rewrite_source_refs(r"concat(source.a, ' won\'t source.b')", ["a", "b"])
+    assert got == r"concat(__src_a, ' won\'t source.b')"
+
+
+def test_strip_source_qualifier_leaves_escaped_literal_alone():
+    assert _strip_source_qualifier(r"note = 'can\'t source.x'") == (
+        r"note = 'can\'t source.x'"
+    )
+
+
+def test_strip_alias_leaves_backticked_name_alone():
+    assert _strip_alias("`t.x` + t.y", "t", "s", "SET") == "`t.x` + y"
+
+
+def test_requalify_source_leaves_backticked_name_alone():
+    assert _requalify_source("t.`s.x` = s.v", "s", "t") == "`s.x` = source.v"
+
+
+def test_split_assignments_reads_past_backticks_and_comments():
+    assert _split_assignments("a = `it's` + 1, b = 'z'") == {
+        "a": "`it's` + 1",
+        "b": "'z'",
+    }
+    assert _split_assignments("a = 1 /* it's */, b = 2") == {
+        "a": "1 /* it's */",
+        "b": "2",
+    }

@@ -219,3 +219,14 @@ def test_mart_prod_incremental_window(spark, sf_dir, tmp_path):
     # backfill happened: every row with a dim match carries the name
     mart = spark.read.parquet(mart_path)
     assert mart.filter(F.col("medium_scale_nm").isNotNull()).count() > 0
+
+
+def test_iso_day_guard_is_eight_ascii_digits(spark):
+    # the guard refuses non-digit input (no '2024-AB-CD' fragment) but
+    # does not check calendar validity, exactly as the docstring says
+    df = spark.createDataFrame(
+        [("20240102",), ("2024ABCD",), ("20241399",), ("2024-1-1",), (None,)],
+        "sale_date string",
+    )
+    got = [r[0] for r in df.select(pipelines._iso_day("sale_date")).collect()]
+    assert got == ["2024-01-02", None, "2024-13-99", None, None]

@@ -216,6 +216,33 @@ def test_execute_dml_merge_expression_set(spark, tmp_path):
             assert got2[k] == (tot, n), k
 
 
+def test_execute_dml_merge_set_list_with_comments_and_backticks(spark, tmp_path):
+    """A SET list whose items carry a backticked name and comments
+    holding a quote: the comments are not literals, so the comma after
+    ``/* it's … */`` still splits the list and ``t.n`` is still
+    de-qualified. A comment after the ON keys reads as space."""
+    from etl_job_spark.sql import execute_dml
+    from etl_job_spark.table import ManifestTable
+
+    t = ManifestTable(str(tmp_path / "cdc"))
+    t.overwrite(spark.createDataFrame(
+        [(1, 100, 5), (2, 200, 7)], "k long, total long, n long"
+    ))
+    spark.createDataFrame(
+        [(2, 42)], "k long, delta long"
+    ).createOrReplaceTempView("batch")
+    execute_dml(
+        spark,
+        t,
+        "MERGE INTO cdc t USING batch b ON t.k = b.k -- the key's pair\n"
+        "WHEN MATCHED THEN UPDATE SET "
+        "t.total = `total` + b.delta /* it's the delta */, "
+        "t.n = t.n * 2 -- don't lose n\n",
+    )
+    got = sorted(tuple(r) for r in t.snapshot(spark).select("k", "total", "n").collect())
+    assert got == [(1, 100, 5), (2, 242, 14)]
+
+
 def test_execute_dml_merge_nmbs_update(spark, tmp_path):
     """WHEN NOT MATCHED BY SOURCE THEN UPDATE SET — Delta's full-sync
     soft-expiry shape: unmatched target rows get flagged instead of
