@@ -1,11 +1,20 @@
-"""Embedding similarity search: brute-force cosine top-k baseline and
-random-hyperplane LSH bucketing as the scale path.
+"""Embedding similarity search: exact cosine and squared-L2 top-k,
+random-hyperplane LSH, trained IVF, product quantization (PQ) and
+IVF-PQ, each as a one-call top-k and (IVF, PQ, IVF-PQ) as a persisted
+index with build / append / search verbs.
 
 Determinism trick shared with the DuckDB oracle: embeddings are
 quantized to integer micro-units (round(x·10⁶)), so dot products and
 norms are exact integer sums — order-independent and bit-identical on
 any engine — and the final cosine is a quotient of exactly-derived
 doubles (IEEE sqrt/div are correctly rounded, hence identical).
+
+One scorer, one ranker. Every path scores with the SQL-string helpers
+``_dot``, ``_sq_l2`` and ``_adc`` (exact bigint folds; cosine through
+``_with_cosine``, which drops pairs with an all-zero side: a zero
+vector has no direction, so it has no neighbours and is nobody's) and
+ranks with ``_rank_topk``: within each query, by score, then by
+neighbour id, so ties never depend on partitioning.
 
 Scale shape:
 - brute force: queries broadcast against the corpus — one pass, no
@@ -14,11 +23,13 @@ Scale shape:
   candidates only pair within buckets (sub-quadratic), then exact
   cosine re-ranks. Plane weights are a fixed integer formula, not
   RNG, so every engine/run agrees.
+- IVF / PQ / IVF-PQ: the quantizer tables ride the plan (or a one-row
+  broadcast), so assignment and encoding are projections.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 EMBED_SCALE = 1_000_000
@@ -37,6 +48,95 @@ def quantized(df: DataFrame, col: str = "embedding") -> DataFrame:
     )
 
 
+def _side(df: DataFrame, id_col: str, id_name: str, p: str) -> DataFrame:
+    """``df`` quantized as (``id_name``, ``{p}_int``, ``{p}n_int``)."""
+    return quantized(df).select(
+        F.col(id_col).alias(id_name),
+        F.col("e_int").alias(f"{p}_int"),
+        F.col("n_int").alias(f"{p}n_int"),
+    )
+
+
+def _dot(a: str, b: str) -> str:
+    """SQL: the exact integer dot product of bigint arrays ``a``, ``b``."""
+    return (
+        f"aggregate(zip_with({a}, {b}, (x, y) -> x * y),"
+        " cast(0 as bigint), (acc, x) -> acc + x)"
+    )
+
+
+def _sq_l2(a: str, b: str) -> str:
+    """SQL: the exact integer squared L2 distance between ``a`` and ``b``."""
+    return (
+        f"aggregate(zip_with({a}, {b}, (x, y) -> (x - y) * (x - y)),"
+        " cast(0 as bigint), (acc, x) -> acc + x)"
+    )
+
+
+def _adc(dtab: str, codes: str) -> str:
+    """SQL: the asymmetric (ADC) distance — one ``dtab[j][codes[j]]``
+    lookup per subspace, summed; the raw vector is never read."""
+    return (
+        f"aggregate(zip_with({dtab}, {codes}, (t, c) -> element_at(t, c + 1)),"
+        " cast(0 as bigint), (acc, x) -> acc + x)"
+    )
+
+
+def _with_cosine(pairs: DataFrame, a: str, b: str) -> DataFrame:
+    """``pairs`` plus the exact ``cosine`` of vectors ``{a}_int`` and
+    ``{b}_int`` (squared norms ``{a}n_int``, ``{b}n_int``). Pairs with
+    a zero-norm side are dropped: a zero vector has no direction.
+
+    The test is ONE predicate over both sides (norms are sums of
+    squares, so never negative): split into per-side conjuncts it
+    would be pushed below the join and substitute the whole
+    quantize-and-fold norm expression into each side's scan filter,
+    computing it twice per vector."""
+    return pairs.filter(F.least(f"{a}n_int", f"{b}n_int") > 0).withColumn(
+        "cosine",
+        F.expr(
+            f"{_dot(f'{a}_int', f'{b}_int')} / (sqrt(cast({a}n_int as double))"
+            f" * sqrt(cast({b}n_int as double)))"
+        ),
+    )
+
+
+def _rank_topk(scored: DataFrame, order: list, k: int) -> DataFrame:
+    """Top-k per query: ``rk`` numbers each ``q_id``'s rows by
+    ``order`` — the score, then the neighbour's id, so ranks are a
+    total order whatever the partitioning — and rows with ``rk <= k``
+    stay. For k ≤ 1000 Spark plans a partial ``WindowGroupLimit``
+    below the ranking exchange, so no partition ships more than k
+    rows per query."""
+    w = Window.partitionBy("q_id").orderBy(*order)
+    return scored.withColumn("rk", F.row_number().over(w).cast("bigint")).filter(
+        F.col("rk") <= k
+    )
+
+
+def _cosine_ranked(pairs: DataFrame, k: int) -> DataFrame:
+    """(q_id, n_id, cosine, rk): ``pairs``' k most similar per query by
+    the exact cosine of ``q_int`` and ``v_int``."""
+    scored = _with_cosine(pairs, "q", "v")
+    return _rank_topk(scored, [F.col("cosine").desc(), "n_id"], k).select(
+        "q_id", "n_id", "cosine", "rk"
+    )
+
+
+def _l2_ranked(pairs: DataFrame, k: int) -> DataFrame:
+    """(q_id, n_id, d2, rk): ``pairs``' k nearest per query by exact
+    squared L2 between ``q_int`` and ``v_int``."""
+    scored = pairs.withColumn("d2", F.expr(_sq_l2("q_int", "v_int")))
+    return _rank_topk(scored, ["d2", "n_id"], k).select("q_id", "n_id", "d2", "rk")
+
+
+def _adc_ranked(pairs: DataFrame, k: int) -> DataFrame:
+    """(q_id, n_id, adist, rk): ``pairs``' k nearest per query by the
+    ADC distance of ``codes`` under the query's ``dtab``."""
+    scored = pairs.withColumn("adist", F.expr(_adc("dtab", "codes")))
+    return _rank_topk(scored, ["adist", "n_id"], k).select("q_id", "n_id", "adist", "rk")
+
+
 def cosine_topk(
     vectors: DataFrame, queries: DataFrame, k: int = 5, id_col: str = "vec_id"
 ) -> DataFrame:
@@ -44,34 +144,10 @@ def cosine_topk(
 
     ``queries`` is small and broadcast; the corpus streams past it in
     one stage. Ranking is totally ordered (cosine desc, neighbor id)."""
-    q = quantized(queries).select(
-        F.col(id_col).alias("q_id"),
-        F.col("e_int").alias("q_int"),
-        F.col("n_int").alias("qn_int"),
-    )
-    v = quantized(vectors).select(
-        F.col(id_col).alias("n_id"),
-        F.col("e_int").alias("v_int"),
-        F.col("n_int").alias("vn_int"),
-    )
-    scored = (
-        v.crossJoin(F.broadcast(q))
-        .filter(F.col("n_id") != F.col("q_id"))
-        .withColumn(
-            "dot",
-            F.expr(
-                "aggregate(zip_with(q_int, v_int, (x, y) -> x * y),"
-                " cast(0 as bigint), (acc, x) -> acc + x)"
-            ),
-        )
-        .withColumn("cosine", F.expr("dot / (sqrt(cast(qn_int as double)) * sqrt(cast(vn_int as double)))"))
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("n_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rk") <= k)
-        .select("q_id", "n_id", "cosine", "rk")
-    )
+    q = _side(queries, id_col, "q_id", "q")
+    v = _side(vectors, id_col, "n_id", "v")
+    pairs = v.crossJoin(F.broadcast(q)).filter(F.col("n_id") != F.col("q_id"))
+    return _cosine_ranked(pairs, k)
 
 
 def plane_weight_expr(p: int) -> str:
@@ -113,17 +189,9 @@ def cosine_near_dups(
         F.col("vid").alias("vec_b"), F.col("e_int").alias("b_int"),
         F.col("n_int").alias("bn_int"), "bucket",
     )
+    pairs = a.join(b, "bucket").filter(F.col("vec_a") < F.col("vec_b"))
     return (
-        a.join(b, "bucket")
-        .filter(F.col("vec_a") < F.col("vec_b"))
-        .withColumn(
-            "dot",
-            F.expr(
-                "aggregate(zip_with(a_int, b_int, (x, y) -> x * y),"
-                " cast(0 as bigint), (acc, x) -> acc + x)"
-            ),
-        )
-        .withColumn("cosine", F.expr("dot / (sqrt(cast(an_int as double)) * sqrt(cast(bn_int as double)))"))
+        _with_cosine(pairs, "a", "b")
         .filter(F.col("cosine") >= threshold)
         .select("vec_a", "vec_b", "cosine")
     )
@@ -203,30 +271,12 @@ def lsh_topk(
     Recall < 1 by construction; the bench compares it to brute force."""
     vb = hyperplane_buckets(vectors, n_planes, id_col)
     qb = hyperplane_buckets(queries, n_planes, id_col).withColumnRenamed("vec_id", "q_id")
-    q = quantized(queries).select(
-        F.col(id_col).alias("q_id"), F.col("e_int").alias("q_int"), F.col("n_int").alias("qn_int")
-    ).join(qb, "q_id")
-    v = quantized(vectors).select(
-        F.col(id_col).alias("n_id"), F.col("e_int").alias("v_int"), F.col("n_int").alias("vn_int")
-    ).join(vb.withColumnRenamed("vec_id", "n_id"), "n_id")
-    scored = (
-        v.join(F.broadcast(q), "bucket")
-        .filter(F.col("n_id") != F.col("q_id"))
-        .withColumn(
-            "dot",
-            F.expr(
-                "aggregate(zip_with(q_int, v_int, (x, y) -> x * y),"
-                " cast(0 as bigint), (acc, x) -> acc + x)"
-            ),
-        )
-        .withColumn("cosine", F.expr("dot / (sqrt(cast(qn_int as double)) * sqrt(cast(vn_int as double)))"))
+    q = _side(queries, id_col, "q_id", "q").join(qb, "q_id")
+    v = _side(vectors, id_col, "n_id", "v").join(
+        vb.withColumnRenamed("vec_id", "n_id"), "n_id"
     )
-    w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("n_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rk") <= k)
-        .select("q_id", "n_id", "cosine", "rk")
-    )
+    pairs = v.join(F.broadcast(q), "bucket").filter(F.col("n_id") != F.col("q_id"))
+    return _cosine_ranked(pairs, k)
 
 
 # ---------------------------------------------------------------------
@@ -234,81 +284,97 @@ def lsh_topk(
 # ---------------------------------------------------------------------
 
 
-def _centroid_literal(cents: list[list[int]]):
-    """k×dim integer centroids as a nested array literal — broadcast to
-    every task inside the plan, so assignment is a pure projection."""
-    return F.array(*[F.array(*[F.lit(int(x)) for x in c]) for c in cents])
-
-
-# past this many centroid ints (k×dim), the plan-literal centroid
-# table stops being a trick and becomes the bottleneck: k=4096 lists
-# of dim=1024 is ~4M Literal nodes — a ~100 MB expression tree that
-# blows plan compilation before any data moves. Bigger quantizers ride
-# a ONE-ROW broadcast DataFrame instead (same __cents column, O(1)
-# plan size), with the k-way argmin as a single transform/array_min
-# expression rather than k generated expressions.
+# past this many ints (k×dim centroids, m×ksub×sub codebook entries),
+# a plan-literal table stops being a trick and becomes the bottleneck:
+# k=4096 lists of dim=1024 is ~4M Literal nodes — a ~100 MB expression
+# tree that blows plan compilation before any data moves (a production
+# codebook at m=64, ksub=256, dim=1024 is 262k ints). Bigger tables
+# ride a ONE-ROW broadcast DataFrame instead (same column, O(1) plan
+# size), with the argmin as a single transform/array_min expression
+# rather than k generated expressions.
 _CENT_LITERAL_MAX_INTS = 100_000
 
 
-def _with_centroids(
-    df: DataFrame, cents: list[list[int]], force_frame: bool = False
+def _table_shape(table: list) -> tuple[int, int]:
+    """(nesting depth, total ints) of a rectangular nested int list."""
+    depth, n = 0, 1
+    while isinstance(table, list):
+        depth, n, table = depth + 1, n * len(table), table[0] if table else None
+    return depth, n
+
+
+def _is_literal_path(table: list) -> bool:
+    """Whether ``_with_table`` attaches ``table`` as a plan literal."""
+    return _table_shape(table)[1] <= _CENT_LITERAL_MAX_INTS
+
+
+def _int_array(table):
+    """A nested int list as a nested array literal column."""
+    if isinstance(table, list):
+        return F.array(*map(_int_array, table))
+    return F.lit(int(table))
+
+
+def _with_table(
+    df: DataFrame, name: str, table: list, force_frame: bool = False
 ) -> DataFrame:
-    """Attach the centroid table as a ``__cents`` column: plan literal
-    below ``_CENT_LITERAL_MAX_INTS`` total ints (cheapest per ROW —
-    pure codegen constant — right for compile-once corpus passes),
-    broadcast one-row crossJoin above it (no row multiplication: the
-    broadcast side is a single row). ``force_frame=True`` takes the
-    broadcast form regardless of size — the k-means loop uses it
-    because its centroids change per round, so the literal plan's
-    compile cost recurs every iteration (guide §7.3)."""
-    if not force_frame and (
-        len(cents) * (len(cents[0]) if cents else 0) <= _CENT_LITERAL_MAX_INTS
-    ):
-        return df.withColumn("__cents", _centroid_literal(cents))
-    spark = df.sparkSession
-    row = spark.createDataFrame(
-        [([list(map(int, c)) for c in cents],)], "__cents array<array<bigint>>"
+    """Attach a nested int table (centroids, codebooks) as column
+    ``name``: a plan literal up to ``_CENT_LITERAL_MAX_INTS`` ints
+    (cheapest per ROW — a pure codegen constant — right for
+    compile-once corpus passes), a broadcast one-row crossJoin above
+    it (no row multiplication: the broadcast side is a single row).
+    ``force_frame=True`` takes the broadcast form whatever the size:
+    the k-means loop, whose centroids change per round, so a literal
+    plan's compile cost would recur every iteration (guide §7.3), and
+    |Q|-small query-side attachments, where the per-call compile
+    dominates (see ``_probe_queries``)."""
+    if not force_frame and _is_literal_path(table):
+        return df.withColumn(name, _int_array(table))
+    depth = _table_shape(table)[0]
+    row = df.sparkSession.createDataFrame(
+        [(table,)], f"{name} {'array<' * depth}bigint{'>' * depth}"
     )
     return df.crossJoin(F.broadcast(row))
 
 
-# argmin over __cents as ONE expression (O(1) plan size, O(k·dim) row
-# cost): distance per centroid via transform, then array_min on
-# (d, cid) structs — struct ordering breaks ties to the lower cid,
-# exactly matching the literal path's least(struct(d, cid)) semantics
-_NEAREST_CID_EXPR = (
-    "array_min(transform(__cents, (c, i) -> struct("
-    "aggregate(zip_with(e_int, c, (x, y) -> (x - y) * (x - y)),"
-    " cast(0 as bigint), (acc, x) -> acc + x) as d,"
-    " cast(i as int) as cid))).cid"
-)
-
-_CENT_DISTS_EXPR = (
-    "transform(__cents, c -> aggregate(zip_with(e_int, c,"
-    " (x, y) -> (x - y) * (x - y)), cast(0 as bigint), (acc, x) -> acc + x))"
-)
+def _argmin_expr(table: str, x: str) -> str:
+    """SQL: the index of ``table``'s entry nearest ``x`` (exact squared
+    L2) as ONE expression — O(1) plan size, O(k·dim) row cost. Struct
+    ordering on (d, cid) breaks ties to the lower index, exactly the
+    literal path's least(struct(d, cid)) semantics."""
+    return (
+        f"array_min(transform({table}, (c, i) -> struct({_sq_l2(x, 'c')} as d,"
+        " cast(i as int) as cid))).cid"
+    )
 
 
-def _is_literal_path(cents: list[list[int]]) -> bool:
-    return len(cents) * (len(cents[0]) if cents else 0) <= _CENT_LITERAL_MAX_INTS
+def _dists_expr(table: str, x: str) -> str:
+    """SQL: the exact squared L2 from ``x`` to each entry of ``table``."""
+    return f"transform({table}, c -> {_sq_l2(x, 'c')})"
+
+
+def _residual_expr(x: str) -> str:
+    """SQL: ``x`` minus the centroid of its list ``cid``."""
+    return f"zip_with({x}, element_at(__cents, cid + 1), (x, y) -> x - y)"
+
+
+_NEAREST_CID_EXPR = _argmin_expr("__cents", "e_int")
+_CENT_DISTS_EXPR = _dists_expr("__cents", "e_int")
 
 
 def _nearest_centroid(cents: list[list[int]]):
     """Column: argmin over squared-L2 to each centroid (exact integer
     arithmetic; ties break to the lower centroid id). No join, no
     shuffle — each row computes k distances in one codegen stage."""
-    dists = [
-        F.expr(
-            f"aggregate(zip_with(e_int, element_at(__cents, {c + 1}),"
-            " (x, y) -> (x - y) * (x - y)), cast(0 as bigint), (acc, x) -> acc + x)"
-        ).alias(f"d{c}")
-        for c in range(len(cents))
-    ]
-    structs = [
-        F.struct(dists[c].alias("d"), F.lit(c).cast("int").alias("cid"))
-        for c in range(len(cents))
-    ]
-    return F.least(*structs)["cid"]
+    return F.least(
+        *[
+            F.struct(
+                F.expr(_sq_l2("e_int", f"element_at(__cents, {c + 1})")).alias("d"),
+                F.lit(c).cast("int").alias("cid"),
+            )
+            for c in range(len(cents))
+        ]
+    )["cid"]
 
 
 def kmeans_centroids(
@@ -348,6 +414,12 @@ def _kmeans_core(v: DataFrame, n_centroids: int, n_iters: int) -> list[list[int]
             .select("e_int")
             .collect()
         )
+        if len(seeds) < n_centroids:
+            raise ValueError(
+                f"cannot train {n_centroids} centroids on a corpus of "
+                f"{len(seeds)} vectors: k-means needs at least one vector "
+                "per centroid"
+            )
         cents = [[int(x) for x in r.e_int] for r in seeds]
         for _ in range(n_iters):
             # training assignment ALWAYS rides the broadcast-frame /
@@ -362,7 +434,7 @@ def _kmeans_core(v: DataFrame, n_centroids: int, n_iters: int) -> list[list[int]
             # the compile-once, corpus-sized assignment in
             # _assigned_corpus keeps the literal path below the
             # threshold, where the cheaper per-row code wins.
-            assigned = _with_centroids(v, cents, force_frame=True).select(
+            assigned = _with_table(v, "__cents", cents, force_frame=True).select(
                 "vid", "e_int", F.expr(_NEAREST_CID_EXPR).alias("cid")
             )
             rows = (
@@ -390,7 +462,7 @@ def _assigned_corpus(vectors: DataFrame, cents: list[list[int]], id_col: str) ->
     table below the size threshold, one transform/array_min expression
     over a broadcast one-row centroid frame above it (identical
     integer arithmetic, identical tie-breaks — determinism-pinned)."""
-    v = _with_centroids(quantized(vectors), cents)
+    v = _with_table(quantized(vectors), "__cents", cents)
     cid = (
         _nearest_centroid(cents)
         if _is_literal_path(cents)
@@ -419,45 +491,24 @@ def _probe_queries(
     the literal path on corpus-sized passes (``_assigned_corpus``)
     never materializes over |Q| rows. Identical integer distances and
     (cdist, cid) ordering either way."""
-    q = _with_centroids(quantized(queries), cents, force_frame=True)
-    dists = F.expr(_CENT_DISTS_EXPR)
+    q = _with_table(quantized(queries), "__cents", cents, force_frame=True)
     probes = q.select(
         F.col(id_col).alias("q_id"),
         F.col("e_int").alias("q_int"),
         F.col("n_int").alias("qn_int"),
-        F.posexplode(dists).alias("cid", "cdist"),
+        F.posexplode(F.expr(_CENT_DISTS_EXPR)).alias("cid", "cdist"),
     )
-    w_probe = Window.partitionBy("q_id").orderBy(F.col("cdist"), F.col("cid"))
-    return (
-        probes.withColumn("pr", F.row_number().over(w_probe))
-        .filter(F.col("pr") <= n_probe)
-        .select("q_id", "q_int", "qn_int", F.col("cid").cast("int").alias("cid"))
+    return _rank_topk(probes, ["cdist", "cid"], n_probe).select(
+        "q_id", "q_int", "qn_int", F.col("cid").cast("int").alias("cid")
     )
 
 
 def _score_topk(assigned: DataFrame, probed: DataFrame, k: int) -> DataFrame:
     """Exact integer cosine over probed lists only, ranked top-k."""
-    scored = (
-        assigned.join(F.broadcast(probed), "cid")
-        .filter(F.col("n_id") != F.col("q_id"))
-        .withColumn(
-            "dot",
-            F.expr(
-                "aggregate(zip_with(q_int, v_int, (x, y) -> x * y),"
-                " cast(0 as bigint), (acc, x) -> acc + x)"
-            ),
-        )
-        .withColumn(
-            "cosine",
-            F.expr("dot / (sqrt(cast(qn_int as double)) * sqrt(cast(vn_int as double)))"),
-        )
+    pairs = assigned.join(F.broadcast(probed), "cid").filter(
+        F.col("n_id") != F.col("q_id")
     )
-    w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("n_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rk") <= k)
-        .select("q_id", "n_id", "cosine", "rk")
-    )
+    return _cosine_ranked(pairs, k)
 
 
 def ivf_topk(
@@ -505,29 +556,55 @@ def ivf_build_index(
     that makes IVF sub-linear in |corpus| per query batch. Rebuild to
     refresh (an index is derived data; the build is idempotent-by-
     replacement into a fresh write)."""
-    spark = vectors.sparkSession
     cents = kmeans_centroids(vectors, n_centroids, n_iters, id_col)
-    cent_rows = [(c, list(map(int, cents[c]))) for c in range(len(cents))]
-    spark.createDataFrame(cent_rows, "cid int, centroid array<bigint>").coalesce(
-        1
-    ).write.mode("overwrite").parquet(f"{index_path}/centroids")
-    from pyspark.sql import Observation
-
-    obs = Observation()
-    _assigned_corpus(vectors, cents, id_col).observe(
-        obs, F.count(F.lit(1)).alias("n")
-    ).write.mode("overwrite").partitionBy("cid").parquet(f"{index_path}/assignment")
-    # staleness ledger: one base row now, one row per later ivf_append.
-    # The count rides the assignment write via observe() — a separate
-    # vectors.count() would recompute the (often expensive) upstream
-    # embedding pipeline a whole extra time for one ledger integer,
-    # and could disagree with the rows actually written if the
-    # upstream is nondeterministic.
-    n_base = int(obs.get["n"])
-    spark.createDataFrame([("base", n_base)], "kind string, n bigint").coalesce(
-        1
-    ).write.mode("overwrite").parquet(f"{index_path}/meta")
+    _write_index(
+        _assigned_corpus(vectors, cents, id_col), index_path, "assignment",
+        by_list=True, cents=cents,
+    )
     return cents
+
+
+def _write_index(
+    df: DataFrame,
+    index_path: str,
+    data: str,
+    append: bool = False,
+    by_list: bool = False,
+    cents: list[list[int]] | None = None,
+    books: list[list[list[int]]] | None = None,
+) -> None:
+    """Every index write: the quantizer tables given (``centroids``:
+    one (cid, centroid) row per list; ``codebooks``: one (j, cid,
+    centroid) row per subspace entry), then ``df`` under
+    ``{index_path}/{data}`` (``cid=…`` directories when ``by_list``),
+    then one row of the ``meta`` staleness ledger: ("base", n)
+    replacing it on a build, ("append", n) added to it on an append.
+    The count rides the data write via observe() — a separate
+    count() would recompute the (often expensive) upstream embedding
+    pipeline a whole extra time for one ledger integer, and could
+    disagree with the rows actually written if the upstream is
+    nondeterministic."""
+    spark = df.sparkSession
+    mode = "append" if append else "overwrite"
+
+    def small(name: str, rows: list, schema: str) -> None:
+        spark.createDataFrame(rows, schema).coalesce(1).write.mode(mode).parquet(
+            f"{index_path}/{name}"
+        )
+
+    if cents is not None:
+        small("centroids", list(enumerate(cents)), "cid int, centroid array<bigint>")
+    if books is not None:
+        small(
+            "codebooks",
+            [(j, c, e) for j, b in enumerate(books) for c, e in enumerate(b)],
+            "j int, cid int, centroid array<bigint>",
+        )
+    obs = Observation()
+    out = df.observe(obs, F.count(F.lit(1)).alias("n")).write.mode(mode)
+    (out.partitionBy("cid") if by_list else out).parquet(f"{index_path}/{data}")
+    kind = "append" if append else "base"
+    small("meta", [(kind, int(obs.get["n"]))], "kind string, n bigint")
 
 
 def _load_centroids(spark, index_path: str) -> list[list[int]]:
@@ -557,19 +634,11 @@ def ivf_append(
     ``ivf_index_staleness`` turns that into a retrain recommendation
     (rebuild with ``ivf_build_index`` — idempotent-by-replacement).
     Returns the staleness summary after the append."""
-    from pyspark.sql import Observation
-
     cents = _load_centroids(spark, index_path)
-    obs = Observation()
-    _assigned_corpus(vectors, cents, id_col).observe(
-        obs, F.count(F.lit(1)).alias("n")
-    ).write.mode("append").partitionBy("cid").parquet(f"{index_path}/assignment")
-    # ledger count rides the write (see ivf_build_index): one upstream
-    # compute, and the count always equals the rows actually appended
-    n_new = int(obs.get["n"])
-    spark.createDataFrame([("append", n_new)], "kind string, n bigint").coalesce(
-        1
-    ).write.mode("append").parquet(f"{index_path}/meta")
+    _write_index(
+        _assigned_corpus(vectors, cents, id_col), index_path, "assignment",
+        append=True, by_list=True,
+    )
     return ivf_index_staleness(spark, index_path)
 
 
@@ -673,68 +742,27 @@ def l2_topk(
     would conflate quantization loss with metric mismatch). Distances
     are exact integer sums over micro-quantized vectors; ranking is
     totally ordered (d2 asc, neighbor id)."""
-    q = quantized(queries).select(
-        F.col(id_col).alias("q_id"), F.col("e_int").alias("q_int")
-    )
-    v = quantized(vectors).select(
-        F.col(id_col).alias("n_id"), F.col("e_int").alias("v_int")
-    )
-    scored = (
-        v.crossJoin(F.broadcast(q))
-        .filter(F.col("n_id") != F.col("q_id"))
-        .withColumn(
-            "d2",
-            F.expr(
-                "aggregate(zip_with(q_int, v_int, (x, y) -> (x - y) * (x - y)),"
-                " cast(0 as bigint), (acc, x) -> acc + x)"
-            ),
-        )
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("d2"), F.col("n_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rk") <= k)
-        .select("q_id", "n_id", "d2", "rk")
-    )
-
-
-def _with_books(
-    df: DataFrame, books: list[list[list[int]]], force_frame: bool = False
-) -> DataFrame:
-    """Attach the m×ksub×(dim/m) codebook table as ``__books`` — plan
-    literal below the centroid-ints threshold, one-row broadcast frame
-    above it (the same O(1)-plan-size discipline as ``_with_centroids``;
-    a production codebook at m=64, ksub=256, dim=1024 is 262k ints).
-    ``force_frame=True`` for |Q|-small QUERY-side attachments, where
-    the literal's per-call plan compile dominates (see
-    ``_probe_queries``); corpus-side encode/unpack keeps the literal's
-    cheaper generated code."""
-    total = sum(len(b) * (len(b[0]) if b else 0) for b in books)
-    if not force_frame and total <= _CENT_LITERAL_MAX_INTS:
-        lit = F.array(
-            *[
-                F.array(*[F.array(*[F.lit(int(x)) for x in c]) for c in b])
-                for b in books
-            ]
-        )
-        return df.withColumn("__books", lit)
-    row = df.sparkSession.createDataFrame(
-        [([[list(map(int, c)) for c in b] for b in books],)],
-        "__books array<array<array<bigint>>>",
-    )
-    return df.crossJoin(F.broadcast(row))
+    q = _side(queries, id_col, "q_id", "q")
+    v = _side(vectors, id_col, "n_id", "v")
+    return _l2_ranked(v.crossJoin(F.broadcast(q)).filter(F.col("n_id") != F.col("q_id")), k)
 
 
 def _pq_codes_expr(sub: int) -> str:
     """codes: per subspace j, the argmin codebook entry over exact
     integer squared-L2 on the j-th slice — ONE expression regardless of
     m/ksub (ties to the lower code id, like every argmin here)."""
-    return (
-        f"transform(__books, (book, j) -> array_min(transform(book, (c, i) -> struct("
-        f"aggregate(zip_with(slice(e_int, j * {sub} + 1, {sub}), c,"
-        " (x, y) -> (x - y) * (x - y)), cast(0 as bigint), (acc, x) -> acc + x) as d,"
-        " cast(i as int) as cid))).cid)"
-    )
+    return f"transform(__books, (book, j) -> {_argmin_expr('book', _slice_expr(sub))})"
+
+
+def _slice_expr(sub: int) -> str:
+    """SQL: the j-th ``sub``-wide slice of ``e_int``."""
+    return f"slice(e_int, j * {sub} + 1, {sub})"
+
+
+def _pq_dtab_expr(sub: int) -> str:
+    """Per-query ADC distance table: dtab[j][c] = exact squared-L2 from
+    the query's j-th slice to codebook entry c (m×ksub bigints)."""
+    return f"transform(__books, (book, j) -> {_dists_expr('book', _slice_expr(sub))})"
 
 
 _BYTE_LUT = "X'" + "".join(f"{i:02X}" for i in range(256)) + "'"
@@ -804,16 +832,6 @@ def _append_layout_codes(
     return df
 
 
-def _pq_dtab_expr(sub: int) -> str:
-    """Per-query ADC distance table: dtab[j][c] = exact squared-L2 from
-    the query's j-th slice to codebook entry c (m×ksub bigints)."""
-    return (
-        f"transform(__books, (book, j) -> transform(book, c -> "
-        f"aggregate(zip_with(slice(e_int, j * {sub} + 1, {sub}), c,"
-        " (x, y) -> (x - y) * (x - y)), cast(0 as bigint), (acc, x) -> acc + x)))"
-    )
-
-
 def pq_train(
     vectors: DataFrame,
     m: int = 4,
@@ -862,7 +880,7 @@ def pq_encode(
     a one-row broadcast), and the output row is the whole point: m
     small ints instead of dim floats."""
     sub = len(books[0][0])
-    return _with_books(quantized(vectors), books).select(
+    return _with_table(quantized(vectors), "__books", books).select(
         F.col(id_col), F.expr(_pq_codes_expr(sub)).alias("codes")
     )
 
@@ -876,27 +894,11 @@ def _pq_score_topk(
     approximate-squared-L2 — never touching the original vectors.
     Output (q_id, n_id, adist, rk), ranked (adist asc, n_id)."""
     sub = len(books[0][0])
-    q = _with_books(quantized(queries), books, force_frame=True).select(
+    q = _with_table(quantized(queries), "__books", books, force_frame=True).select(
         F.col(id_col).alias("q_id"), F.expr(_pq_dtab_expr(sub)).alias("dtab")
     )
-    scored = (
-        codes.select(F.col(id_col).alias("n_id"), "codes")
-        .crossJoin(F.broadcast(q))
-        .filter(F.col("n_id") != F.col("q_id"))
-        .withColumn(
-            "adist",
-            F.expr(
-                "aggregate(zip_with(dtab, codes, (t, c) -> element_at(t, c + 1)),"
-                " cast(0 as bigint), (acc, x) -> acc + x)"
-            ),
-        )
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("adist"), F.col("n_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rk") <= k)
-        .select("q_id", "n_id", "adist", "rk")
-    )
+    pairs = codes.select(F.col(id_col).alias("n_id"), "codes").crossJoin(F.broadcast(q))
+    return _adc_ranked(pairs.filter(F.col("n_id") != F.col("q_id")), k)
 
 
 def _exact_rerank(
@@ -910,30 +912,18 @@ def _exact_rerank(
     broadcast-hash join on id (on a ManifestTable corpus with a vec_id
     bloom this is a file-pruned read, not a full scan). Output contract
     = ``l2_topk`` (q_id, n_id, d2, rk)."""
-    q = quantized(queries).select(
-        F.col(id_col).alias("q_id"), F.col("e_int").alias("q_int")
-    )
-    v = quantized(vectors).select(
-        F.col(id_col).alias("n_id"), F.col("e_int").alias("v_int")
-    )
+    q = _side(queries, id_col, "q_id", "q")
+    v = _side(vectors, id_col, "n_id", "v")
     cand = shortlist.select("q_id", "n_id")
-    scored = (
-        v.join(F.broadcast(cand), "n_id")
-        .join(F.broadcast(q), "q_id")
-        .withColumn(
-            "d2",
-            F.expr(
-                "aggregate(zip_with(q_int, v_int, (x, y) -> (x - y) * (x - y)),"
-                " cast(0 as bigint), (acc, x) -> acc + x)"
-            ),
-        )
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("d2"), F.col("n_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rk") <= k)
-        .select("q_id", "n_id", "d2", "rk")
-    )
+    return _l2_ranked(v.join(F.broadcast(cand), "n_id").join(F.broadcast(q), "q_id"), k)
+
+
+def _check_rerank(k: int, rerank: int | None, rerank_vectors: DataFrame | None) -> None:
+    """A re-rank needs the raw vectors it re-scores, and R ≥ k."""
+    if (rerank is None) != (rerank_vectors is None):
+        raise ValueError("rerank and rerank_vectors must be passed together")
+    if rerank is not None and rerank < k:
+        raise ValueError(f"rerank={rerank} must be >= k={k}")
 
 
 def pq_topk(
@@ -957,8 +947,7 @@ def pq_topk(
     error only costs recall it pushed a true neighbor below rank R —
     on weakly structured corpora this is the difference between ~0.3
     and ~0.8 recall@5 for a few R·|Q| exact distance evaluations."""
-    if rerank is not None and rerank < k:
-        raise ValueError(f"rerank={rerank} must be >= k={k}")
+    _check_rerank(k, rerank, None if rerank is None else vectors)
     books = pq_train(vectors, m, ksub, n_iters, id_col)
     codes = pq_encode(vectors, books, id_col)
     short = _pq_score_topk(codes, queries, books, rerank or k, id_col)
@@ -984,26 +973,9 @@ def pq_build_index(
     production m=64/dim=1024 the index is 64 bytes/vector, ~1/64th
     the raw floats. Idempotent-by-replacement like
     ``ivf_build_index``."""
-    from pyspark.sql import Observation
-
-    spark = vectors.sparkSession
     books = pq_train(vectors, m, ksub, n_iters, id_col)
-    rows = [
-        (j, c, list(map(int, books[j][c])))
-        for j in range(len(books))
-        for c in range(len(books[j]))
-    ]
-    spark.createDataFrame(rows, "j int, cid int, centroid array<bigint>").coalesce(
-        1
-    ).write.mode("overwrite").parquet(f"{index_path}/codebooks")
-    obs = Observation()
-    _packed_codes(pq_encode(vectors, books, id_col), books).observe(
-        obs, F.count(F.lit(1)).alias("n")
-    ).write.mode("overwrite").parquet(f"{index_path}/codes")
-    # staleness ledger, same shape as the IVF index (ivf_build_index)
-    spark.createDataFrame(
-        [("base", int(obs.get["n"]))], "kind string, n bigint"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{index_path}/meta")
+    codes = _packed_codes(pq_encode(vectors, books, id_col), books)
+    _write_index(codes, index_path, "codes", books=books)
     return books
 
 
@@ -1029,18 +1001,11 @@ def pq_append(
     ``meta`` ledger counts appended-vs-base rows and
     ``ivf_index_staleness`` (shared ledger shape) turns that into a
     retrain recommendation. Returns the staleness summary."""
-    from pyspark.sql import Observation
-
     books = _load_books(spark, index_path)
-    obs = Observation()
-    _append_layout_codes(
+    codes = _append_layout_codes(
         spark, index_path, pq_encode(vectors, books, id_col), books
-    ).observe(
-        obs, F.count(F.lit(1)).alias("n")
-    ).write.mode("append").parquet(f"{index_path}/codes")
-    spark.createDataFrame(
-        [("append", int(obs.get["n"]))], "kind string, n bigint"
-    ).coalesce(1).write.mode("append").parquet(f"{index_path}/meta")
+    )
+    _write_index(codes, index_path, "codes", append=True)
     return ivf_index_staleness(spark, index_path)
 
 
@@ -1064,10 +1029,7 @@ def pq_search(
     exact L2, as in ``pq_topk``; the refine touches only the R·|Q|
     shortlisted ids. ``max_staleness`` enforces the append ledger like
     ``ivf_search``."""
-    if (rerank is None) != (rerank_vectors is None):
-        raise ValueError("rerank and rerank_vectors must be passed together")
-    if rerank is not None and rerank < k:
-        raise ValueError(f"rerank={rerank} must be >= k={k}")
+    _check_rerank(k, rerank, rerank_vectors)
     _enforce_staleness(spark, index_path, max_staleness)
     books = _load_books(spark, index_path)
     codes = _unpacked_codes(spark.read.parquet(f"{index_path}/codes"), books)
@@ -1108,51 +1070,28 @@ def ivfpq_build_index(
     coarse k-means plus m residual k-means, all deterministic. A
     search then reads only the probed lists' code files — partition
     pruning AND compression on the same scan."""
-    from pyspark.sql import Observation
-
-    spark = vectors.sparkSession
     cents = kmeans_centroids(vectors, n_centroids, n_iters, id_col)
     resid = _ivfpq_residuals(vectors, cents, id_col)
     books = _pq_train_int(
         resid.select(F.col("n_id").alias("vid"), "e_int"), m, ksub, n_iters
     )
-    sub = len(books[0][0])
-    cent_rows = [(c, list(map(int, cents[c]))) for c in range(len(cents))]
-    spark.createDataFrame(cent_rows, "cid int, centroid array<bigint>").coalesce(
-        1
-    ).write.mode("overwrite").parquet(f"{index_path}/centroids")
-    book_rows = [
-        (j, c, list(map(int, books[j][c])))
-        for j in range(len(books))
-        for c in range(len(books[j]))
-    ]
-    spark.createDataFrame(book_rows, "j int, cid int, centroid array<bigint>").coalesce(
-        1
-    ).write.mode("overwrite").parquet(f"{index_path}/codebooks")
-    obs = Observation()
-    _packed_codes(
-        _with_books(resid, books).select(
-            "n_id", "cid", F.expr(_pq_codes_expr(sub)).alias("codes")
-        ),
-        books,
-    ).observe(obs, F.count(F.lit(1)).alias("n")).write.mode("overwrite").partitionBy(
-        "cid"
-    ).parquet(f"{index_path}/codes")
-    spark.createDataFrame(
-        [("base", int(obs.get["n"]))], "kind string, n bigint"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{index_path}/meta")
+    codes = _packed_codes(_ivfpq_codes(resid, books), books)
+    _write_index(codes, index_path, "codes", by_list=True, cents=cents, books=books)
 
 
 def _ivfpq_residuals(vectors: DataFrame, cents: list[list[int]], id_col: str) -> DataFrame:
     """(n_id, cid, e_int) where e_int is the vector's RESIDUAL against
     its nearest coarse centroid — the representation IVF-PQ codes."""
     assigned = _assigned_corpus(vectors, cents, id_col)
-    return _with_centroids(assigned, cents).select(
-        "n_id",
-        "cid",
-        F.expr(
-            "zip_with(v_int, element_at(__cents, cid + 1), (x, y) -> x - y)"
-        ).alias("e_int"),
+    return _with_table(assigned, "__cents", cents).select(
+        "n_id", "cid", F.expr(_residual_expr("v_int")).alias("e_int")
+    )
+
+
+def _ivfpq_codes(resid: DataFrame, books: list[list[list[int]]]) -> DataFrame:
+    """(n_id, cid, codes): the residuals PQ-encoded."""
+    return _with_table(resid, "__books", books).select(
+        "n_id", "cid", F.expr(_pq_codes_expr(len(books[0][0]))).alias("codes")
     )
 
 
@@ -1170,26 +1109,11 @@ def ivfpq_append(
     Both quantizers drift as the corpus grows; the shared ``meta``
     ledger feeds ``ivf_index_staleness``/``max_staleness``. Returns
     the staleness summary."""
-    from pyspark.sql import Observation
-
     cents = _load_centroids(spark, index_path)
     books = _load_books(spark, index_path)
-    sub = len(books[0][0])
     resid = _ivfpq_residuals(vectors, cents, id_col)
-    obs = Observation()
-    _append_layout_codes(
-        spark,
-        index_path,
-        _with_books(resid, books).select(
-            "n_id", "cid", F.expr(_pq_codes_expr(sub)).alias("codes")
-        ),
-        books,
-    ).observe(obs, F.count(F.lit(1)).alias("n")).write.mode("append").partitionBy(
-        "cid"
-    ).parquet(f"{index_path}/codes")
-    spark.createDataFrame(
-        [("append", int(obs.get["n"]))], "kind string, n bigint"
-    ).coalesce(1).write.mode("append").parquet(f"{index_path}/meta")
+    codes = _append_layout_codes(spark, index_path, _ivfpq_codes(resid, books), books)
+    _write_index(codes, index_path, "codes", append=True, by_list=True)
     return ivf_index_staleness(spark, index_path)
 
 
@@ -1212,10 +1136,7 @@ def ivfpq_search(
     with exact L2 as in ``pq_search``. Output (q_id, n_id, adist, rk),
     or ``l2_topk``'s (q_id, n_id, d2, rk) when re-ranked.
     ``max_staleness`` enforces the append ledger like ``ivf_search``."""
-    if (rerank is None) != (rerank_vectors is None):
-        raise ValueError("rerank and rerank_vectors must be passed together")
-    if rerank is not None and rerank < k:
-        raise ValueError(f"rerank={rerank} must be >= k={k}")
+    _check_rerank(k, rerank, rerank_vectors)
     _enforce_staleness(spark, index_path, max_staleness)
     cents = _load_centroids(spark, index_path)
     books = _load_books(spark, index_path)
@@ -1223,15 +1144,10 @@ def ivfpq_search(
     probed = _probe_queries(queries, cents, n_probe, id_col)
     # query-side attachments ride the broadcast frame: |Q|·n_probe
     # rows never amortize a k×dim / m×ksub×sub literal plan compile
-    pq = (
-        _with_centroids(probed, cents, force_frame=True)
-        .withColumn(
-            "e_int",
-            F.expr("zip_with(q_int, element_at(__cents, cid + 1), (x, y) -> x - y)"),
-        )
-        .select("q_id", "cid", "e_int")
+    pq = _with_table(probed, "__cents", cents, force_frame=True).select(
+        "q_id", "cid", F.expr(_residual_expr("q_int")).alias("e_int")
     )
-    pq = _with_books(pq, books, force_frame=True).select(
+    pq = _with_table(pq, "__books", books, force_frame=True).select(
         "q_id", "cid", F.expr(_pq_dtab_expr(sub)).alias("dtab")
     )
     probe_cids = sorted({r.cid for r in probed.select("cid").distinct().collect()})
@@ -1241,23 +1157,8 @@ def ivfpq_search(
         ),
         books,
     )
-    scored = (
-        codes.join(F.broadcast(pq), "cid")
-        .filter(F.col("n_id") != F.col("q_id"))
-        .withColumn(
-            "adist",
-            F.expr(
-                "aggregate(zip_with(dtab, codes, (t, c) -> element_at(t, c + 1)),"
-                " cast(0 as bigint), (acc, x) -> acc + x)"
-            ),
-        )
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("adist"), F.col("n_id"))
-    short = (
-        scored.withColumn("rk", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rk") <= (rerank or k))
-        .select("q_id", "n_id", "adist", "rk")
-    )
+    pairs = codes.join(F.broadcast(pq), "cid").filter(F.col("n_id") != F.col("q_id"))
+    short = _adc_ranked(pairs, rerank or k)
     if rerank is None:
         return short
     return _exact_rerank(rerank_vectors, queries, short, k, id_col)

@@ -204,38 +204,30 @@ def _sql_literal(tok: str):
     import re
 
     tok = tok.strip()
-    if len(tok) >= 2 and tok[0] == tok[-1] and tok[0] in ("'", '"'):
-        body, q = tok[1:-1], tok[0]
-        # decode left-to-right so a REAL string literal is recognized
-        # (no unescaped quote inside — otherwise this is an expression
-        # whose first and last characters merely happen to be quotes,
-        # e.g. 'a' OR x = 'b')
-        out: list[str] = []
-        i, real = 0, True
-        while i < len(body):
-            c = body[i]
-            if c == "\\" and i + 1 < len(body):
-                nxt = body[i + 1]
-                if nxt in ("'", '"', "\\"):
-                    out.append(nxt)
-                    i += 2
-                    continue
+    if tok[:1] in ("'", '"'):
+        # a string literal is exactly ONE closed lexer span; a span that
+        # closes early is an expression whose first and last characters
+        # merely happen to be quotes (e.g. 'a' OR x = 'b'), and a span
+        # that also swallows a character appended after the text never
+        # closed
+        end = _SQL_SPAN.match(tok + " ").end()
+        if end > len(tok):
+            raise ValueError(f"literal {tok!r}: unclosed quoted string")
+        if end == len(tok):
+            q = tok[0]
+
+            def unescape(m) -> str:
+                if m.group() == q + q:
+                    return q
+                if m.group(1) in ("'", '"', "\\"):
+                    return m.group(1)
                 raise ValueError(
                     f"literal {tok!r}: unsupported backslash escape "
-                    f"'\\{nxt}' — only \\', \\\", and \\\\ are decoded "
+                    f"'\\{m.group(1)}' — only \\', \\\", and \\\\ are decoded "
                     "here (use the library verb for exotic escapes)"
                 )
-            if c == q:
-                if i + 1 < len(body) and body[i + 1] == q:
-                    out.append(q)
-                    i += 2
-                    continue
-                real = False  # bare inner quote: not one literal
-                break
-            out.append(c)
-            i += 1
-        if real:
-            return "".join(out)
+
+            return re.sub(rf"\\(.)|{q}{q}", unescape, tok[1:-1], flags=re.S)
     if re.fullmatch(r"[+-]?\d+", tok):
         return int(tok)
     if re.fullmatch(r"[+-]?\d*\.\d+([eE][+-]?\d+)?", tok):
@@ -3008,18 +3000,22 @@ def execute_sql_script(
 def _split_script(script: str) -> list[str]:
     """Split on semicolons outside lexer spans (a ``;`` inside a
     literal, a backticked name or a comment never splits). Each part's
-    LEADING comments are stripped so a script may carry header
-    comments before its first verb; comments elsewhere stay in the
-    statement, where every scanner reads past them."""
+    LEADING comments (the lexer's comment spans) are stripped so a
+    script may carry header comments before its first verb; comments
+    elsewhere stay in the statement, where every scanner reads past
+    them. An unclosed ``/*`` comment refuses, as Spark's parser does."""
+    for m in _SQL_SPAN.finditer(script):
+        if m.group().startswith("/*") and not m.group().endswith("*/", 2):
+            raise ValueError(f"unclosed comment {m.group()!r} in SQL script")
     view, _ = _sql_view(script)
     parts = _split_at(script, [i for i, c in enumerate(view) if c == ";"])
 
     def _strip_leading_comments(p: str) -> str:
-        prev = None
-        while prev != p:
-            prev = p
-            p = re.sub(r"(?s)^\s*--[^\n]*(\n|$)", "", p)
-            p = re.sub(r"(?s)^\s*/\*.*?\*/", "", p)
-        return p.strip()
+        start = 0
+        for m in _SQL_SPAN.finditer(p):
+            if p[start:m.start()].strip() or not m.group().startswith(("--", "/*")):
+                break
+            start = m.end()
+        return p[start:].strip()
 
     return [q for q in (_strip_leading_comments(p) for p in parts) if q]

@@ -95,6 +95,23 @@ def test_sql_literal_decodes_spark_escapes():
         _sql_literal(r"'a\nb'")
 
 
+def test_sql_literal_refuses_an_unclosed_literal():
+    # the lexer reads \' as an escaped quote, so this literal never
+    # closes (Spark reports an unclosed literal); it must not decode
+    for tok in (r"'abc\'", "'abc", r'"say \"'):
+        with pytest.raises(ValueError, match="unclosed quoted string"):
+            _sql_literal(tok)
+
+
+def test_split_script_refuses_an_unclosed_comment():
+    with pytest.raises(ValueError, match=r"unclosed comment '/\* trailing'"):
+        _split_script("SELECT 1; /* trailing")
+    assert _split_script("-- head\n/* a;b */ SELECT 1; /**/ SELECT 2") == [
+        "SELECT 1",
+        "SELECT 2",
+    ]
+
+
 def test_spec_predicate_decodes_backslash_literal():
     spec = _parse_spec_predicate(r"v = 'don\'t' AND k BETWEEN 1 AND 5")
     assert spec == [("v", "=", "don't"), ("k", "between", (1, 5))]

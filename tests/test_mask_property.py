@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import re
 
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -130,6 +131,17 @@ def test_split_script_agrees_with_the_mask_oracle(s):
         return p.strip()
 
     masked, spans = _mask_sql_spans(s)
+    # an unclosed /* comment runs to the end of the text, so it is the
+    # last span (outside backticks: an even count of them before it);
+    # the splitter refuses it, as Spark's parser does
+    tokens = list(re.finditer("\x00L(\\d+)\x00", masked))
+    if tokens and tokens[-1].end() == len(masked):
+        last = spans[int(tokens[-1].group(1))]
+        in_backticks = masked[: tokens[-1].start()].count("`") % 2 == 1
+        if not in_backticks and last.startswith("/*") and not last.endswith("*/", 2):
+            with pytest.raises(ValueError, match="unclosed comment"):
+                _split_script(s)
+            return
     expect = [
         p
         for p in (
