@@ -321,6 +321,20 @@ def _parse_spec_predicate(pred: str) -> list[tuple]:
     return spec
 
 
+def _where_arg(where_sql: str):
+    """A DML WHERE as the row verbs take it: the spec form when
+    ``_parse_spec_predicate`` accepts it — the copy-on-write planner
+    then prunes and proves files from metadata before any scan — else
+    the SQL string. The spec keeps the SQL text, which the commit
+    records as the statement's history predicate."""
+    from etl_job_spark.table import _SpecText
+
+    try:
+        return _SpecText(_parse_spec_predicate(where_sql), where_sql)
+    except ValueError:
+        return where_sql
+
+
 def _qualifier(*names: str) -> str:
     """Pattern for a ``<name>.`` qualifier (any of ``names``,
     case-insensitive) that starts a word; group 1 is the name."""
@@ -431,10 +445,7 @@ def _subquery_key_dml(
     if negated:
         if keys_df.filter(F.col(col).isNull()).limit(1).count():
             # SQL: NOT IN over a set containing NULL matches no row
-            base = t.latest_version()
-            if base is None:
-                raise FileNotFoundError(f"no committed version at {t.path}")
-            return base
+            return t.require_version()
         guard = f"{col} IS NOT NULL"
         if assignments is None:
             return t.merge(
@@ -471,9 +482,7 @@ def _merge_plan_lines(
     per-key min/max aggregate, the distinct-partition collect, the
     bloom value probe, the ordered engine's broadcast row probe) —
     never a target data-file read."""
-    base = t.latest_version()
-    if base is None:
-        raise FileNotFoundError(f"no committed version at {t.path}")
+    base = t.require_version()
     man = t._read_manifest(base)
     schema = t._manifest_schema(man)
     if schema is None:
@@ -533,78 +542,44 @@ def _merge_plan_lines(
 
 
 def _explain_where_plan_lines(
-    spark: SparkSession, t, verb: str, where_sql: str
+    spark: SparkSession, t, verb: str, where_sql: str, op: str
 ) -> list[str]:
-    """EXPLAIN UPDATE/DELETE's report body: the same two-pass planning
-    the copy-on-write verbs run — metadata prune from the spec form
-    when the WHERE is provable (``_prune_by_key_stats`` +
-    ``_entry_all_match``, exactly ``update_where``'s shape), else the
-    honest 'hit discovery scans all candidates' answer — without
-    scanning or committing anything."""
-    from etl_job_spark.table import (
-        _entry_all_match,
-        _fully_dead,
-        _normalize_predicates,
-        _prune_tmap,
-        _session_utc,
-    )
+    """EXPLAIN UPDATE/DELETE/REPLACE WHERE's report body: the metadata
+    half of the copy-on-write planner the verb runs
+    (``ManifestTable._rewrite_candidates``), fed the same WHERE form
+    (``_where_arg``) — so the reported split is the executed one —
+    without scanning or committing anything."""
+    from etl_job_spark.table import _where_form
 
-    base = t.latest_version()
-    if base is None:
-        raise FileNotFoundError(f"no committed version at {t.path}")
+    base = t.require_version()
     man = t._read_manifest(base)
-    schema = t._manifest_schema(man)
+    where = _where_form(_where_arg(where_sql))
+    proved, candidates, untouched = t._rewrite_candidates(
+        spark, man, t._manifest_schema(man), where, op
+    )
+    live = len(proved) + len(candidates) + len(untouched)
     lines = [
         f"verb: {verb}",
         f"target: {t.path} (version {base})",
         f"where: {where_sql}",
     ]
-    live = [e for e in man["files"] if not _fully_dead(e)]
-    spec = None
-    try:
-        # the same normal form the verbs' spec planning reasons from
-        spec = _normalize_predicates(_parse_spec_predicate(where_sql))
-    except ValueError:
-        pass
-    if spec is None:
-        lines += [
-            f"files: total={len(live)} rewrite_candidates={len(live)} "
+    if where.spec is None:
+        return lines + [
+            f"files: total={live} rewrite_candidates={live} "
             "carried_by_reference=0 (before hit discovery)",
             "prune: none — the predicate is not provable from file "
             "metadata; hit discovery runs one pushed-predicate scan "
             "over all candidates and rewrites only files holding a "
             "matching row",
         ]
-        return lines
-    cmap = man.get("column_map") or {}
-    utc = _session_utc(spark)
-    candidates, untouched = t._prune_by_key_stats(
-        live, spec, schema,
-        partition_by=man["partition_by"], utc=utc,
-        column_map=cmap, partition_specs=man.get("partition_specs"),
-    )
-    tmap = _prune_tmap(man["partition_by"], man.get("partition_specs"), utc)
-    part_types = {
-        cmap.get(f.name, f.name): f.dataType.simpleString()
-        for f in schema.fields
-    }
-    phys_spec = [(cmap.get(c, c), op, v) for c, op, v in spec]
-    proved = [
-        e
-        for e in candidates
-        if not (e.get("dv") or e.get("dv_ref"))
-        and _entry_all_match(e, phys_spec, part_types, tmap, utc)
-    ]
-    scan = len(candidates) - len(proved)
-    lines += [
-        f"files: total={len(live)} metadata_pruned={len(untouched)} "
-        f"candidates={len(candidates)}",
+    return lines + [
+        f"files: total={live} metadata_pruned={len(untouched)} "
+        f"candidates={len(proved) + len(candidates)}",
         f"all-match proved from metadata (no scan): {len(proved)}",
-        f"hit-discovery scan candidates: {scan}",
+        f"hit-discovery scan candidates: {len(candidates)}",
         "prune: spec form — partition values, key-range stats, and "
         "blooms drop provably-cold files before any file opens",
     ]
-    return lines
 
 
 def _explain_in_subquery_lines(
@@ -701,7 +676,9 @@ def _explain_dml(spark: SparkSession, t, s: str, resolve=None) -> DataFrame:
                 spark, t, "UPDATE", sub, resolve
             )
         else:
-            lines = _explain_where_plan_lines(spark, t, "UPDATE", where_sql)
+            lines = _explain_where_plan_lines(
+                spark, t, "UPDATE", where_sql, "update-allmatch"
+            )
         lines.insert(
             3, "set: " + ", ".join(sorted(_split_assignments(
                 body[set_at + 3:where_at]
@@ -722,7 +699,9 @@ def _explain_dml(spark: SparkSession, t, s: str, resolve=None) -> DataFrame:
                 spark, t, "DELETE", sub, resolve
             )
         else:
-            lines = _explain_where_plan_lines(spark, t, "DELETE", where_sql)
+            lines = _explain_where_plan_lines(
+                spark, t, "DELETE", where_sql, "delete-cow"
+            )
             lines.append(
                 "mode: copy_on_write by default (merge_on_read writes "
                 "deletion vectors instead of rewriting hit files)"
@@ -747,7 +726,7 @@ def _explain_dml(spark: SparkSession, t, s: str, resolve=None) -> DataFrame:
             ]
             pred_sql = tail2[: min(cuts)].strip() if cuts else tail2.strip()
             lines = _explain_where_plan_lines(
-                spark, t, "INSERT … REPLACE WHERE", pred_sql
+                spark, t, "INSERT … REPLACE WHERE", pred_sql, "replace-allmatch"
             )
             lines.append(
                 "replace: all-match proved files are replaced whole "
@@ -1310,7 +1289,9 @@ def execute_dml(spark: SparkSession, table, sql: str, resolve=None) -> int:
                 spark, t, sub[0], sub[1], sub[2], _body_df,
                 assignments=assignments,
             )
-        return t.update_where(spark, assignments, s[where_at + 5:].strip())
+        return t.update_where(
+            spark, assignments, _where_arg(s[where_at + 5:].strip())
+        )
     if upper.startswith("DELETE"):
         from_at = _scan_top(s, "FROM")
         where_at = _scan_top(s, "WHERE")
@@ -1327,7 +1308,7 @@ def execute_dml(spark: SparkSession, table, sql: str, resolve=None) -> int:
         sub = _parse_in_subquery(s[where_at + 5:])
         if sub is not None:  # WHERE k [NOT] IN (SELECT …) → keyed merge
             return _subquery_key_dml(spark, t, sub[0], sub[1], sub[2], _body_df)
-        return t.delete_where(spark, s[where_at + 5:].strip())
+        return t.delete_where(spark, _where_arg(s[where_at + 5:].strip()))
     if upper.startswith("MERGE"):
         m = re.match(
             r"(?is)^MERGE\s+(?:WITH\s+SCHEMA\s+EVOLUTION\s+)?INTO\s+"
@@ -1362,17 +1343,7 @@ def execute_dml(spark: SparkSession, table, sql: str, resolve=None) -> int:
             _check_target(rm.group(1), t)
             if body.upper().startswith("VALUES"):
                 body = f"SELECT * FROM ({body})"
-            # hand overwrite_where the SPEC form when the predicate is
-            # a simple conjunction of col-vs-literal terms — that form
-            # plans from metadata alone (partition/stats/bloom prune +
-            # the all-match short-circuit), so the canonical SQL
-            # whole-partition replace never pays a discovery scan
-            # (ADVICE r11); anything richer keeps the string predicate
-            try:
-                pred: str | list[tuple] = _parse_spec_predicate(pred_sql)
-            except ValueError:
-                pred = pred_sql
-            return t.overwrite_where(spark, _body_df(body), pred)
+            return t.overwrite_where(spark, _body_df(body), _where_arg(pred_sql))
         # INSERT OVERWRITE <t> SELECT …/VALUES … — truncate-and-reload
         # keeping the table's layout (partitioning/blooms/constraints
         # carry: overwrite with no explicit spec inherits them)
@@ -1521,9 +1492,7 @@ def execute_dml(spark: SparkSession, table, sql: str, resolve=None) -> int:
         if m is None:
             raise ValueError("supported form: SHOW CREATE TABLE <table>")
         _check_target(m.group(1), t)
-        base = t.latest_version()
-        if base is None:
-            raise FileNotFoundError(f"no committed version at {t.path}")
+        base = t.require_version()
         man = t._read_manifest(base)
         schema = t._manifest_schema(man)
         if schema is None:
@@ -1572,9 +1541,7 @@ def execute_dml(spark: SparkSession, table, sql: str, resolve=None) -> int:
         kind = m.group(1).upper()
         if kind == "PARTITIONS":
             return t.partitions_df(spark)
-        base = t.latest_version()
-        if base is None:
-            raise FileNotFoundError(f"no committed version at {t.path}")
+        base = t.require_version()
         man = t._read_manifest(base)
         if kind.startswith("COLUMNS"):
             schema = t._manifest_schema(man)

@@ -88,6 +88,7 @@ import re
 import urllib.parse
 import uuid
 from collections.abc import Callable, Mapping, Sequence
+from typing import NamedTuple
 
 import pyarrow.parquet as pq
 
@@ -1002,6 +1003,42 @@ def predicate_column(predicates: Sequence[tuple]) -> Column:
     if out is None:
         raise ValueError("empty predicate list: use snapshot() for a full scan")
     return out
+
+
+class _SpecText(list):
+    """A predicate spec parsed from SQL text: the row verbs plan from
+    the spec, and history records the text the statement was written
+    with."""
+
+    def __init__(self, spec: Sequence[tuple], text: str):
+        super().__init__(spec)
+        self.text = text
+
+
+class _Where(NamedTuple):
+    """A row verb's WHERE in every form ``_rewrite_targets`` plans from."""
+
+    pred: Column  # the row filter (NULL never matches)
+    spec: list[tuple] | None  # conjunctive spec: metadata prune + all-match proof
+    values: dict[str, list] | None  # values probe (``delete_keys``)
+    text: str  # the recorded history predicate
+
+
+def _where_form(
+    where: str | Column | Sequence[tuple],
+    values: dict[str, list] | None = None,
+    text: str | None = None,
+) -> _Where:
+    """``where`` as a str, a Column, or a predicate spec (the
+    ``snapshot_where`` tuple form, validated here, before any commit
+    attempt)."""
+    if isinstance(where, (list, tuple)):
+        spec = _normalize_predicates(where)
+        text = text or getattr(where, "text", None) or str(spec)
+        return _Where(predicate_column(spec), spec, values, text)
+    if isinstance(where, str):
+        return _Where(F.expr(where), None, values, text or where)
+    return _Where(where, None, values, text or str(where))
 
 
 def _stats_disjoint(entry: dict, key_ranges: dict[str, tuple]) -> bool:
@@ -2204,6 +2241,13 @@ class ManifestTable:
         vs = self.versions()
         return vs[-1] if vs else None
 
+    def require_version(self) -> int:
+        """``latest_version()``, refusing a table with no commit yet."""
+        base = self.latest_version()
+        if base is None:
+            raise FileNotFoundError(f"no committed version at {self.path}")
+        return base
+
     def _read_raw_manifest(self, version: int) -> dict:
         """One manifest file as written: either a checkpoint (full
         ``files`` list) or a delta (``delta.upserts``/``delta.removes``
@@ -2328,9 +2372,7 @@ class ManifestTable:
         just passing an older ``version``.
         """
         if version is None:
-            version = self.latest_version()
-            if version is None:
-                raise FileNotFoundError(f"no committed version at {self.path}")
+            version = self.require_version()
         man = self._read_manifest(version)
         schema = self._manifest_schema(man)
         if not man["files"]:
@@ -2492,9 +2534,7 @@ class ManifestTable:
         if (predicates is None) == (any_of is None):
             raise ValueError("pass exactly one of predicates / any_of")
         if version is None:
-            version = self.latest_version()
-            if version is None:
-                raise FileNotFoundError(f"no committed version at {self.path}")
+            version = self.require_version()
         # the RAW manifest (schema/partition_by always inline) — file
         # resolution is the planner's call: sidecar-backed versions
         # plan distributed without ever materializing the entry list
@@ -2548,9 +2588,7 @@ class ManifestTable:
         if (predicates is None) == (any_of is None):
             raise ValueError("pass exactly one of predicates / any_of")
         if version is None:
-            version = self.latest_version()
-            if version is None:
-                raise FileNotFoundError(f"no committed version at {self.path}")
+            version = self.require_version()
         raw = self._read_raw_manifest(version)
         schema = self._manifest_schema(raw)
         specs = (
@@ -2818,6 +2856,103 @@ class ManifestTable:
             else:
                 cold.append(e)
         return still, cold
+
+    def _rewrite_candidates(
+        self,
+        spark: SparkSession,
+        man: dict,
+        schema: StructType | None,
+        where: _Where,
+        op: str,
+    ) -> tuple[list[dict], list[dict], list[dict]]:
+        """The metadata half of ``_rewrite_targets``:
+        ``(proved, candidates, untouched)`` without opening a data file.
+
+        Fully-dead files (every row DV-deleted) hold no row to match
+        and are dropped from all three lists, so a rewrite commit
+        leaves them out. A spec ``where`` prunes provably-cold files
+        from partition values, key-range stats and blooms
+        (``_prune_by_key_stats``), then proves from the same metadata
+        which candidates match on EVERY row (``_entry_all_match``:
+        partition constants, spec-history dirs, stats ranges with a
+        recorded zero null count; a file with a DV never proves, its
+        live rows are not what the footer describes). A values probe
+        (``delete_keys``) prunes by per-file stats and blooms
+        (``_split_by_values``). Any other ``where`` can't be reasoned
+        about from metadata: every live file is a candidate. ``op``
+        tags ``last_planning``."""
+        live = [e for e in man["files"] if not _fully_dead(e)]
+        cmap = man.get("column_map") or {}
+        utc = _session_utc(spark)
+        if where.spec is not None:
+            candidates, untouched = self._prune_by_key_stats(
+                live, where.spec, schema,
+                partition_by=man["partition_by"], utc=utc,
+                column_map=cmap, partition_specs=man.get("partition_specs"),
+            )
+            tmap = _prune_tmap(man["partition_by"], man.get("partition_specs"), utc)
+            part_types = {
+                cmap.get(f.name, f.name): f.dataType.simpleString()
+                for f in (schema.fields if schema else [])
+            }
+            phys_spec = [(cmap.get(c, c), o, v) for c, o, v in where.spec]
+            proved, candidates = self._split_candidates(
+                spark,
+                candidates,
+                lambda e: not (e.get("dv") or e.get("dv_ref"))
+                and _entry_all_match(e, phys_spec, part_types, tmap, utc),
+                op,
+            )
+            return proved, candidates, untouched
+        if where.values:
+            candidates, untouched = self._split_by_values(
+                spark, live, where.values, self._schema_types(man), utc, op,
+                column_map=cmap,
+            )
+            return [], candidates, untouched
+        return [], live, []
+
+    def _rewrite_targets(
+        self,
+        spark: SparkSession,
+        man: dict,
+        schema: StructType | None,
+        where: _Where,
+        op: str,
+    ) -> tuple[list[dict], list[dict], list[dict]]:
+        """The one copy-on-write target planner of UPDATE, DELETE and
+        REPLACE WHERE: ``(proved, hit, untouched)`` over ``man``'s files.
+
+        ``_rewrite_candidates`` splits the files from metadata alone;
+        then ONE scan over the remaining candidates, with the
+        predicate pushed into the parquet reader (footer min/max skips
+        whole row groups), finds the files that hold a matching row
+        (``hit``). ``proved`` files match on every row and were never
+        opened; ``untouched`` files hold no matching row and carry
+        into the next manifest by reference. The predicate speaks
+        LOGICAL names and files store PHYSICAL ones, so the scan
+        renames and NULL-fills committed fields a file predates (a
+        metadata-only ADD COLUMN) before the predicate resolves."""
+        proved, candidates, untouched = self._rewrite_candidates(
+            spark, man, schema, where, op
+        )
+        hit: list[dict] = []
+        if candidates:
+            inv = {p: l for l, p in (man.get("column_map") or {}).items()}
+            scan = _null_fill_missing(
+                _renamed(self._read_files(spark, candidates, with_file_path=True), inv),
+                schema,
+            )
+            hit_files = {
+                _strip_file_scheme(r["__file"])
+                for r in scan.filter(where.pred).select("__file").distinct().collect()
+            }
+            for entry in candidates:
+                full = os.path.abspath(
+                    os.path.join(entry.get("base") or self.data_dir, entry["path"])
+                )
+                (hit if full in hit_files else untouched).append(entry)
+        return proved, hit, untouched
 
     @staticmethod
     def _schema_types(man: dict) -> dict[str, str]:
@@ -3802,9 +3937,7 @@ class ManifestTable:
         plan time rather than risk enforcing different semantics."""
 
         def attempt() -> int:
-            base = self.latest_version()
-            if base is None:
-                raise FileNotFoundError(f"no committed version at {self.path}")
+            base = self.require_version()
             man = self._read_manifest(base)
             cons = dict(man.get("constraints") or {})
             for name in drop or []:
@@ -3860,9 +3993,7 @@ class ManifestTable:
             )
 
         def attempt() -> int:
-            base = self.latest_version()
-            if base is None:
-                raise FileNotFoundError(f"no committed version at {self.path}")
+            base = self.require_version()
             man = self._read_manifest(base)
             props = dict(man.get("properties") or {})
             missing = [k for k in drops if k not in props]
@@ -3895,9 +4026,7 @@ class ManifestTable:
 
     def tblproperties(self, version: int | None = None) -> dict[str, str]:
         """The user TBLPROPERTIES of ``version`` (default latest)."""
-        v = self.latest_version() if version is None else int(version)
-        if v is None:
-            raise FileNotFoundError(f"no committed version at {self.path}")
+        v = self.require_version() if version is None else int(version)
         return dict(self._read_raw_manifest(v).get("properties") or {})
 
     def alter_column_nullability(
@@ -3916,9 +4045,7 @@ class ManifestTable:
         task-side fast path), and MERGE/UPDATE rewrites validate their
         output. ``SHOW COLUMNS`` reports the column non-nullable while
         the constraint stands. Returns the new version."""
-        base = self.latest_version()
-        if base is None:
-            raise FileNotFoundError(f"no committed version at {self.path}")
+        base = self.require_version()
         man = self._read_manifest(base)
         schema = self._manifest_schema(man)
         if schema is not None and column not in {f.name for f in schema.fields}:
@@ -3953,9 +4080,7 @@ class ManifestTable:
         write). Returns the new version."""
 
         def attempt() -> int:
-            base = self.latest_version()
-            if base is None:
-                raise FileNotFoundError(f"no committed version at {self.path}")
+            base = self.require_version()
             man = self._read_manifest(base)
             schema = self._manifest_schema(man)
             if schema is None:
@@ -4041,9 +4166,7 @@ class ManifestTable:
         re-keying that layout as data grows is this operation."""
 
         def attempt() -> int:
-            base = self.latest_version()
-            if base is None:
-                raise FileNotFoundError(f"no committed version at {self.path}")
+            base = self.require_version()
             man = self._read_manifest(base)
             schema = self._manifest_schema(man)
             if schema is None:
@@ -4178,9 +4301,7 @@ class ManifestTable:
             )
 
         def attempt() -> int:
-            base = self.latest_version()
-            if base is None:
-                raise FileNotFoundError(f"no committed version at {self.path}")
+            base = self.require_version()
             man = self._read_manifest(base)
             schema = self._manifest_schema(man)
             if schema is None:
@@ -4372,9 +4493,7 @@ class ManifestTable:
           fully rewritten. Vacuum on the CLONE only ever touches the
           clone's own directories.
         """
-        src_v = self.latest_version() if version is None else int(version)
-        if src_v is None:
-            raise FileNotFoundError(f"no committed version at {self.path}")
+        src_v = self.require_version() if version is None else int(version)
         man = self._read_manifest(src_v)
         if any(_dv_count(e) for e in man["files"]):
             raise ValueError(
@@ -4563,9 +4682,7 @@ class ManifestTable:
         Returns the new version."""
 
         def attempt() -> int:
-            base = self.latest_version()
-            if base is None:
-                raise FileNotFoundError(f"no committed version at {self.path}")
+            base = self.require_version()
             man = self._read_manifest(base)
             schema = self._manifest_schema(man)
             if schema is None:
@@ -4761,11 +4878,12 @@ class ManifestTable:
         matching rows; ``df`` lands as new files. Readers see the old
         state or the new state, never a mix.
 
-        Planning matches ``update_where``: a PREDICATE-SPEC tuple form
-        (``snapshot_where``'s shape) prunes provably-cold files from
-        partition values, stats, and blooms WITHOUT opening them, and
-        files whose metadata PROVES every row matches (the canonical
-        whole-partition replace) become rewrite targets with no
+        Targets are planned by ``_rewrite_targets``, the planner
+        ``update_where`` and ``delete_where`` share: a PREDICATE-SPEC
+        tuple form (``snapshot_where``'s shape) prunes provably-cold
+        files from partition values, stats, and blooms WITHOUT opening
+        them, and files whose metadata PROVES every row matches (the
+        canonical whole-partition replace) are dropped whole with no
         discovery scan at all — "recompute yesterday" on a 100 TB
         date-partitioned mart opens O(yesterday) files. A plain
         str/Column predicate finds hit files with one pushed-predicate
@@ -4779,22 +4897,15 @@ class ManifestTable:
         (the scope predicate must resolve against the existing schema
         — use ``append`` for additive evolution). Returns the new
         version."""
-        spec: list[tuple] | None = None
-        if isinstance(predicate, (list, tuple)):
-            spec = _normalize_predicates(predicate)
-            pred = predicate_column(spec)
-        else:
-            pred = F.expr(predicate) if isinstance(predicate, str) else predicate
+        where = _where_form(predicate)
+        pred = where.pred
 
         def attempt() -> int:
-            base = self.latest_version()
-            if base is None:
-                raise FileNotFoundError(f"no committed version at {self.path}")
+            base = self.require_version()
             man = self._read_manifest(base)
             schema = self._manifest_schema(man)
             cmap = man.get("column_map") or {}
             inv = {p: l for l, p in cmap.items()}
-            partition_by_ = man["partition_by"]
             incoming = _align(df, schema, None) if schema is not None else df
             bad = incoming.filter(~F.coalesce(pred, F.lit(False))).limit(1).count()
             if bad:
@@ -4804,58 +4915,11 @@ class ManifestTable:
                     "must satisfy it (Delta's replaceWhere rule; widen the "
                     "predicate or filter the frame)"
                 )
-            candidates = man["files"]
-            untouched: list[dict] = []
-            touched: list[dict] = []
-            if spec is not None:
-                # spec-form planning (update_where's shape): metadata
-                # prune, then the all-match short-circuit — a file the
-                # metadata PROVES fully in scope is a rewrite target
-                # with no scan (whole-partition replaces plan from
-                # metadata alone)
-                candidates, untouched = self._prune_by_key_stats(
-                    candidates, spec, schema,
-                    partition_by=partition_by_, utc=_session_utc(spark),
-                    column_map=cmap, partition_specs=man.get("partition_specs"),
-                )
-                utc = _session_utc(spark)
-                tmap = _prune_tmap(partition_by_, man.get("partition_specs"), utc)
-                part_types = {
-                    cmap.get(f.name, f.name): f.dataType.simpleString()
-                    for f in schema.fields
-                }
-                phys_spec = [(cmap.get(c, c), op, v) for c, op, v in spec]
-                proved, candidates = self._split_candidates(
-                    spark,
-                    candidates,
-                    lambda e: not (e.get("dv") or e.get("dv_ref"))
-                    and _entry_all_match(e, phys_spec, part_types, tmap, utc),
-                    "replace-allmatch",
-                )
-                # proved files are REPLACED WHOLE: every row matches,
-                # so they are simply dropped — never read, never in
-                # the kept-rows rewrite below
-            if candidates:
-                # discovery: which remaining files hold a matching row
-                # (same pushed-predicate scan shape as the CoW DELETE)
-                scan = _null_fill_missing(
-                    _renamed(
-                        self._read_files(spark, candidates, with_file_path=True),
-                        inv,
-                    ),
-                    schema,
-                )
-                hit_files = {
-                    _strip_file_scheme(r["__file"])
-                    for r in scan.filter(pred).select("__file").distinct().collect()
-                }
-                for entry in candidates:
-                    full = os.path.abspath(
-                        os.path.join(
-                            entry.get("base") or self.data_dir, entry["path"]
-                        )
-                    )
-                    (touched if full in hit_files else untouched).append(entry)
+            # proved files are REPLACED WHOLE: every row matches, so
+            # they are simply dropped — never read, never rewritten
+            _, touched, untouched = self._rewrite_targets(
+                spark, man, schema, where, "replace-allmatch"
+            )
             partition_by = man["partition_by"]
             blooms = man.get("bloom_cols")
             new_entries: list[dict] = []
@@ -4876,12 +4940,7 @@ class ManifestTable:
                 validate_frame=incoming if constraints else None,
                 column_map=cmap,
             )
-            op = {
-                "op": "overwrite_where",
-                "predicate": predicate
-                if isinstance(predicate, str)
-                else (str(spec) if spec is not None else str(pred)),
-            }
+            op = {"op": "overwrite_where", "predicate": where.text}
             return self._commit(
                 untouched + new_entries, schema or incoming.schema,
                 partition_by or None, base, op, bloom_cols=blooms,
@@ -5713,10 +5772,7 @@ class ManifestTable:
         matches NULL)."""
         vals = [v for v in dict.fromkeys(values) if v is not None]
         if not vals:
-            base = self.latest_version()
-            if base is None:
-                raise FileNotFoundError(f"no committed version at {self.path}")
-            return base
+            return self.require_version()
         return self.delete_where(
             spark,
             F.col(key_col).isin(vals),
@@ -5729,7 +5785,7 @@ class ManifestTable:
     def delete_where(
         self,
         spark: SparkSession,
-        predicate: str | Column,
+        predicate: str | Column | Sequence[tuple],
         mode: str = "copy_on_write",
         mor_row_limit: int = _MOR_FALLBACK_ROWS,
         _prune_values: dict[str, list] | None = None,
@@ -5740,11 +5796,21 @@ class ManifestTable:
         delete publishes nothing). SQL DELETE semantics either way:
         rows where the predicate is NULL are kept.
 
+        ``predicate`` is a str/Column, or a PREDICATE SPEC — the
+        ``snapshot_where`` tuple form (``[("dy", "=", "20240201")]``,
+        the spec ``update_where`` and ``overwrite_where`` take). A spec
+        is planned from metadata before any file opens: provably-cold
+        files (partition values, key-range stats, blooms) are carried
+        by reference, and files whose metadata PROVES every row
+        matches — a whole partition — are dropped without a scan.
+
         ``mode="copy_on_write"`` (default) — the Delta/Iceberg CoW
         shape, in two passes:
 
-        1. one scan over the snapshot with the predicate pushed into
-           the parquet reader finds which files actually contain a
+        1. ``_rewrite_targets`` (the planner UPDATE and REPLACE WHERE
+           share) runs the metadata split above, then one scan over
+           the remaining candidates with the predicate pushed into the
+           parquet reader finds which files actually contain a
            matching row (footer min/max lets whole row groups — and
            with them most files — be skipped without reading data).
            The result is a driver-side file list, the same scale
@@ -5772,11 +5838,10 @@ class ManifestTable:
         later rewrite of a file's rows (MERGE touch, compact)
         materializes its DV away.
         """
+        where = _where_form(predicate, _prune_values, _describe)
         if mode == "merge_on_read":
             try:
-                return self._delete_where_mor(
-                    spark, predicate, mor_row_limit, _prune_values, _describe
-                )
+                return self._delete_where_mor(spark, where, mor_row_limit)
             except _CowFallback:
                 pass  # matched set too large for MoR — rewrite instead
         elif mode != "copy_on_write":
@@ -5785,69 +5850,38 @@ class ManifestTable:
             )
 
         def attempt() -> int:
-            base = self.latest_version()
-            if base is None:
-                raise FileNotFoundError(f"no committed version at {self.path}")
+            base = self.require_version()
             man = self._read_manifest(base)
-            pred = F.expr(predicate) if isinstance(predicate, str) else predicate
-
-            # point-delete planning prune (delete_keys): stats + blooms
-            # drop provably-cold files before the scan even opens them
-            candidates = man["files"]
-            untouched: list[dict] = []
-            if _prune_values:
-                types = self._schema_types(man)
-                utc = _session_utc(spark)
-                candidates, untouched = self._split_by_values(
-                    spark, man["files"], _prune_values, types, utc, "delete-cow",
-                    column_map=man.get("column_map"),
-                )
-            if not candidates:
-                return base
-
-            # the predicate speaks LOGICAL names; files store PHYSICAL —
-            # and may predate a metadata-only ADD COLUMN, so the scan
-            # NULL-fills committed fields the files lack before the
-            # predicate resolves against it
             schema = self._manifest_schema(man)
-            cmap = man.get("column_map") or {}
-            inv = {p: l for l, p in cmap.items()}
-            scan = _null_fill_missing(
-                _renamed(
-                    self._read_files(spark, candidates, with_file_path=True), inv
-                ),
-                schema,
+            # proved files hold only matching rows: dropped whole
+            proved, touched, untouched = self._rewrite_targets(
+                spark, man, schema, where, "delete-cow"
             )
-            hit_files = {
-                _strip_file_scheme(r["__file"])
-                for r in scan.filter(pred).select("__file").distinct().collect()
-            }
-            touched = []
-            for entry in candidates:
-                full = os.path.abspath(
-                    os.path.join(entry.get("base") or self.data_dir, entry["path"])
-                )
-                (touched if full in hit_files else untouched).append(entry)
-            if not touched:
+            if not (proved or touched):
                 return base  # nothing matched; no new version
 
             partition_by = man["partition_by"]
-            kept = _null_fill_missing(
-                _renamed(self._read_files(spark, touched), inv), schema
-            ).filter(~F.coalesce(pred, F.lit(False)))
-            if schema is not None:
-                kept = _align(kept, schema)
-            else:
-                schema = kept.schema
-            new_entries = self._write_data_files(
-                _renamed(kept, cmap), partition_by or None,
-                bloom_cols=man.get("bloom_cols"),
-            )
-            op = {
-                "op": "delete",
-                "predicate": _describe
-                or (predicate if isinstance(predicate, str) else str(pred)),
-            }
+            cmap = man.get("column_map") or {}
+            new_entries: list[dict] = []
+            if touched:
+                kept = _null_fill_missing(
+                    _renamed(
+                        self._read_files(spark, touched),
+                        {p: l for l, p in cmap.items()},
+                    ),
+                    schema,
+                ).filter(~F.coalesce(where.pred, F.lit(False)))
+                if schema is not None:
+                    kept = _align(kept, schema)
+                else:
+                    schema = kept.schema
+                new_entries = self._write_data_files(
+                    _renamed(kept, cmap), partition_by or None,
+                    bloom_cols=man.get("bloom_cols"),
+                )
+            if schema is None:
+                schema = self.snapshot(spark, base).schema
+            op = {"op": "delete", "predicate": where.text}
             return self._commit(
                 untouched + new_entries, schema, partition_by or None, base, op,
                 bloom_cols=man.get("bloom_cols"),
@@ -5880,16 +5914,19 @@ class ManifestTable:
 
         Planned like ``delete_where``'s copy-on-write, in two passes:
 
-        1. find the files that actually hold a matching row. When
-           ``where`` is a PREDICATE SPEC (the ``snapshot_where`` tuple
-           form), planning first drops provably-cold files from
-           partition values, key-range stats, and blooms WITHOUT
-           opening them — "backfill one column for last week" touches
-           O(window) files on a clustered 100 TB mart. A plain
-           str/Column predicate skips that metadata prune (arbitrary
-           expressions can't be reasoned about from stats) and finds
-           hit files with one pushed-predicate scan.
-        2. rewrite ONLY the hit files with the assignments applied
+        1. ``_rewrite_targets`` finds the files that hold a matching
+           row. When ``where`` is a PREDICATE SPEC (the
+           ``snapshot_where`` tuple form), it first drops provably-cold
+           files from partition values, key-range stats, and blooms
+           WITHOUT opening them — "backfill one column for last week"
+           touches O(window) files on a clustered 100 TB mart — and
+           takes files whose metadata PROVES every row matches as
+           targets with no scan, so "backfill a whole partition" plans
+           from metadata alone. A plain str/Column predicate skips the
+           metadata split (arbitrary expressions can't be reasoned
+           about from stats) and finds hit files with one
+           pushed-predicate scan.
+        2. rewrite ONLY the target files with the assignments applied
            (under the CURRENT partition spec — legacy-layout files
            migrate as a side effect, like merge rewrites); every
            untouched file is carried into the new manifest by
@@ -5899,22 +5936,13 @@ class ManifestTable:
         """
         if not set:
             raise ValueError("update_where: empty SET map")
-        spec: list[tuple] | None = None
-        if isinstance(where, (list, tuple)):
-            spec = _normalize_predicates(where)
-            pred = predicate_column(spec)
-            describe = str(spec)
-        else:
-            pred = F.expr(where) if isinstance(where, str) else where
-            describe = where if isinstance(where, str) else str(pred)
+        where_ = _where_form(where)
         set_exprs = {
             c: (F.expr(e) if isinstance(e, str) else e) for c, e in set.items()
         }
 
         def attempt() -> int:
-            base = self.latest_version()
-            if base is None:
-                raise FileNotFoundError(f"no committed version at {self.path}")
+            base = self.require_version()
             man = self._read_manifest(base)
             schema = self._manifest_schema(man)
             if schema is None:
@@ -5928,81 +5956,18 @@ class ManifestTable:
                 )
             partition_by = man["partition_by"]
             cmap = man.get("column_map") or {}
-
-            candidates = man["files"]
-            untouched: list[dict] = []
-            if spec is not None:
-                candidates, untouched = self._prune_by_key_stats(
-                    man["files"], spec, schema,
-                    partition_by=partition_by, utc=_session_utc(spark),
-                    column_map=cmap, partition_specs=man.get("partition_specs"),
-                )
-            candidates = [e for e in candidates if not _fully_dead(e)]
-            if not candidates:
-                return base
-
-            # fast path: a candidate whose metadata PROVES every row
-            # matches the spec (``_entry_all_match`` — count_where's
-            # positive matcher: partition constants, spec-history
-            # dirs, stats ranges with a recorded zero null count) is a
-            # hit without scanning; when every candidate proves, the
-            # hit-discovery scan below is skipped entirely — the
-            # "backfill a whole partition" statement plans from
-            # metadata alone. Files with DVs stay in the scan path
-            # (their live-row set is not what the footer describes).
-            touched: list[dict] = []
-            if spec is not None:
-                utc = _session_utc(spark)
-                tmap = _prune_tmap(
-                    partition_by, man.get("partition_specs"), utc
-                )
-                part_types = {
-                    cmap.get(f.name, f.name): f.dataType.simpleString()
-                    for f in schema.fields
-                }
-                phys_spec = [
-                    (cmap.get(c, c), op, v) for c, op, v in spec
-                ]
-                proved, candidates = self._split_candidates(
-                    spark,
-                    candidates,
-                    lambda e: not (e.get("dv") or e.get("dv_ref"))
-                    and _entry_all_match(e, phys_spec, part_types, tmap, utc),
-                    "update-allmatch",
-                )
-                touched.extend(proved)
-            if candidates:
-                # the predicate/SET speak LOGICAL names; files PHYSICAL
-                # — NULL-filled for metadata-only added columns the
-                # files predate, so e.g. the backfill shape
-                # ``SET c = … WHERE c IS NULL`` resolves
-                inv = {p: l for l, p in cmap.items()}
-                scan = _null_fill_missing(
-                    _renamed(
-                        self._read_files(spark, candidates, with_file_path=True),
-                        inv,
-                    ),
-                    schema,
-                )
-                hit_files = {
-                    _strip_file_scheme(r["__file"])
-                    for r in scan.filter(pred).select("__file").distinct().collect()
-                }
-                for entry in candidates:
-                    full = os.path.abspath(
-                        os.path.join(
-                            entry.get("base") or self.data_dir, entry["path"]
-                        )
-                    )
-                    (touched if full in hit_files else untouched).append(entry)
+            proved, hit, untouched = self._rewrite_targets(
+                spark, man, schema, where_, "update-allmatch"
+            )
+            touched = proved + hit
             if not touched:
                 return base  # nothing matched; no new version
 
             rows = _align(self._read_files(spark, touched), schema, cmap)
-            hit = F.coalesce(pred, F.lit(False))
+            hit_row = F.coalesce(where_.pred, F.lit(False))
             updated = rows.select(
                 *[
-                    F.when(hit, set_exprs[c].cast(logical[c]))
+                    F.when(hit_row, set_exprs[c].cast(logical[c]))
                     .otherwise(F.col(c))
                     .alias(c)
                     if c in set_exprs
@@ -6022,7 +5987,7 @@ class ManifestTable:
             )
             op = {
                 "op": "update",
-                "predicate": describe,
+                "predicate": where_.text,
                 "set": sorted(set_exprs),
             }
             return self._commit(
@@ -6033,12 +5998,7 @@ class ManifestTable:
         return self._with_commit_retries(attempt)
 
     def _delete_where_mor(
-        self,
-        spark: SparkSession,
-        predicate: str | Column,
-        mor_row_limit: int,
-        prune_values: dict[str, list] | None = None,
-        describe: str | None = None,
+        self, spark: SparkSession, where: _Where, mor_row_limit: int
     ) -> int:
         """Deletion-vector DELETE (see ``delete_where`` mode docs).
 
@@ -6049,9 +6009,7 @@ class ManifestTable:
         driver hop. Raises ``_CowFallback`` past ``mor_row_limit``."""
 
         def attempt() -> int:
-            base = self.latest_version()
-            if base is None:
-                raise FileNotFoundError(f"no committed version at {self.path}")
+            base = self.require_version()
             man = self._read_manifest(base)
             if any(e.get("base") for e in man["files"]):
                 raise ValueError(
@@ -6061,17 +6019,13 @@ class ManifestTable:
                     "paths — use the default copy_on_write mode, which "
                     "rewrites the touched files into this table"
                 )
-            pred = F.expr(predicate) if isinstance(predicate, str) else predicate
-            # point-delete planning prune (delete_keys): stats + blooms
-            # drop provably-cold files before the scan opens them
-            candidates = man["files"]
-            if prune_values:
-                types = self._schema_types(man)
-                utc = _session_utc(spark)
-                candidates, _ = self._split_by_values(
-                    spark, candidates, prune_values, types, utc, "delete-mor",
-                    column_map=man.get("column_map"),
-                )
+            # the metadata half of the CoW planner; proved files are
+            # scanned too, since a DV records each deleted position
+            schema = self._manifest_schema(man)
+            proved, candidates, _ = self._rewrite_candidates(
+                spark, man, schema, where, "delete-mor"
+            )
+            candidates = proved + candidates
             if not candidates:
                 return base
             # existing DVs are applied by _read_files, so re-deleting an
@@ -6086,9 +6040,9 @@ class ManifestTable:
                     ),
                     {p: l for l, p in (man.get("column_map") or {}).items()},
                 ),
-                self._manifest_schema(man),
+                schema,
             )
-            matched = scan.filter(pred).select(
+            matched = scan.filter(where.pred).select(
                 _rel_path_col(self.data_dir).alias("__dv_path"),
                 F.col("__idx").alias("pos"),
             )
@@ -6155,11 +6109,9 @@ class ManifestTable:
             op = {
                 "op": "delete",
                 "mode": "merge_on_read",
-                "predicate": describe
-                or (predicate if isinstance(predicate, str) else str(pred)),
+                "predicate": where.text,
                 "n_deleted": total,
             }
-            schema = self._manifest_schema(man)
             if schema is None:
                 schema = self.snapshot(spark, base).schema
             return self._commit(
@@ -6340,9 +6292,7 @@ class ManifestTable:
         spec = _normalize_predicates(predicates) if predicates is not None else None
 
         def attempt() -> int:
-            base = self.latest_version()
-            if base is None:
-                raise FileNotFoundError(f"no committed version at {self.path}")
+            base = self.require_version()
             man = self._read_manifest(base)
             in_scope = None
             if spec is not None:
@@ -6438,9 +6388,7 @@ class ManifestTable:
         The at-scale answer to ``snapshot(spark).count()`` scanning a
         100 TB table to count it."""
         if version is None:
-            version = self.latest_version()
-            if version is None:
-                raise FileNotFoundError(f"no committed version at {self.path}")
+            version = self.require_version()
         raw = self._read_raw_manifest(version)
         if "live_rows" in raw:
             # commit-time rollup: ONE manifest read, no file-list
@@ -6482,9 +6430,7 @@ class ManifestTable:
         (kicc_to_tb_sales.py SELECT COUNT(*) guards) — O(metadata)
         here instead of a table scan there."""
         if version is None:
-            version = self.latest_version()
-            if version is None:
-                raise FileNotFoundError(f"no committed version at {self.path}")
+            version = self.require_version()
         raw = self._read_raw_manifest(version)
         schema = self._manifest_schema(raw)
         cmap = raw.get("column_map") or {}
@@ -6567,9 +6513,7 @@ class ManifestTable:
         O(chain) removes/replacements without ever materializing the
         base list on the driver; inline manifests ship via Arrow."""
         if version is None:
-            version = self.latest_version()
-            if version is None:
-                raise FileNotFoundError(f"no committed version at {self.path}")
+            version = self.require_version()
         raw = self._read_raw_manifest(version)
         node, removes, upserts = self._sidecar_plan(raw)
         ref_uri = (
@@ -6675,9 +6619,7 @@ class ManifestTable:
         pre-evolution manifest (schema recovered from the files)."""
 
         def attempt() -> int:
-            base = self.latest_version()
-            if base is None:
-                raise FileNotFoundError(f"no committed version at {self.path}")
+            base = self.require_version()
             man = self._read_manifest(base)
             schema = self._manifest_schema(man)
             if schema is None:
@@ -6721,9 +6663,7 @@ class ManifestTable:
         current version, file/row rollups (from the manifest's commit
         rollups, no file I/O), partition spec, and the guard
         properties (constraints, bloom columns, rename map)."""
-        base = self.latest_version()
-        if base is None:
-            raise FileNotFoundError(f"no committed version at {self.path}")
+        base = self.require_version()
         raw = self._read_raw_manifest(base)
         man = self._read_manifest(base) if "n_files" not in raw else raw
         row = (

@@ -1,22 +1,21 @@
-"""Dump `.explain('formatted')` for queries touched by the r15
-optimization round into plans/r15/<query>_<tag>.txt.
+"""Dump `.explain('formatted')` for registry queries into
+plans/<round>/<query>_<tag>.txt.
 
-Run:  python tools/explain_r15.py <tag> <query> [<query> ...]
-      python tools/explain_r15.py before dedup_minhash_lsh ...
+Run:  python tools/explain_plans.py <round> <tag> <query> [<query> ...]
+      python tools/explain_plans.py r15 before dedup_minhash_lsh ...
 
 Special name `cc_edges`: dumps the symmetrized-edge frame of the
-dedup_clusters pair pipeline BEFORE its localCheckpoint — the r14
-dumps showed only `Scan ExistingRDD` because connected_components
-checkpoints its edges, so the single-pair-subtree + Generate(explode)
-claim had no committed artifact (VERDICT r14 item 8). This dump is
-that artifact.
+dedup_clusters pair pipeline BEFORE its localCheckpoint —
+connected_components checkpoints its edges, so the query's own plan
+shows only `Scan ExistingRDD` where the single-pair-subtree +
+Generate(explode) shape lives.
 
 The `before` files are captured on the pre-optimization tree, the
-`after` files on the optimized tree — the judge diffs the two against
-the claims in OPTIMIZATION_r15.md. Plans are captured at sf0.1 (the
-benched scale); queries that commit table versions during DataFrame
-construction do that work here too (scratch-scoped, same as any bench
-invocation).
+`after` files on the optimized tree, and the two are diffed against
+the round's OPTIMIZATION notes. Plans are captured at sf0.1 (the
+benched scale) unless SPARK_GRAFT_SF_DIR says otherwise; queries that
+commit table versions during DataFrame construction do that work here
+too (scratch-scoped, same as any bench invocation).
 """
 
 from __future__ import annotations
@@ -50,17 +49,18 @@ def _cc_edges_frame(spark, sf):
 
 
 def main() -> None:
-    tag = sys.argv[1]
-    names = sys.argv[2:]
+    if len(sys.argv) < 4:
+        sys.exit(__doc__)
+    rnd, tag, names = sys.argv[1], sys.argv[2], sys.argv[3:]
     sf = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
     from etl_job_spark.plans.registry import QUERIES
     from etl_job_spark.session import get_spark
 
-    spark = get_spark(f"explain-r15-{tag}")
+    spark = get_spark(f"explain-{rnd}-{tag}")
     spark.sparkContext.setLogLevel("ERROR")
     out_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r15"
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", rnd
     )
     os.makedirs(out_dir, exist_ok=True)
     for name in names:
