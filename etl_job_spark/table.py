@@ -94,7 +94,12 @@ import pyarrow.parquet as pq
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructField, StructType
+from pyspark.sql.types import (
+    StringType,
+    StructField,
+    StructType,
+    _parse_datatype_string,
+)
 
 from etl_job_spark.commit_store import (
     CommitStore,
@@ -119,6 +124,10 @@ _STATS_MAX_COLUMNS = 32
 # parquet sidecar under _dv/ and the manifest holds a reference — the
 # manifest stays O(files), never O(deleted rows)
 _DV_INLINE_MAX = 1024
+
+# the fixed schema of a spilled DV sidecar: (manifest-relative data
+# file path, physical row position) — read typed, never inferred
+_DV_SIDECAR_SCHEMA = "path string, pos bigint"
 
 # a merge-on-read DELETE matching more rows than this auto-falls-back
 # to copy-on-write: past that point rewriting the touched files is
@@ -2089,9 +2098,12 @@ def _renamed(df: DataFrame, mapping: dict[str, str] | None) -> DataFrame:
     ({a: b, b: a}) cannot transiently collide. Columns outside the
     mapping (including planner extras like __file/__idx) pass through
     untouched."""
-    if not mapping or not any(c in mapping for c in df.columns):
+    if not mapping:
         return df
-    return df.select(*[F.col(c).alias(mapping.get(c, c)) for c in df.columns])
+    cols = df.columns
+    if not any(c in mapping for c in cols):
+        return df
+    return df.select(*[F.col(c).alias(mapping.get(c, c)) for c in cols])
 
 
 def _align(
@@ -2104,32 +2116,14 @@ def _align(
     Delta's column-mapping shape: a rename changes only this map;
     every file, old and new, keeps storing the physical name)."""
     cmap = column_map or {}
+    have = set(df.columns)
     return df.select(
         *[
             F.col(cmap.get(f.name, f.name)).cast(f.dataType).alias(f.name)
-            if cmap.get(f.name, f.name) in df.columns
+            if cmap.get(f.name, f.name) in have
             else F.lit(None).cast(f.dataType).alias(f.name)
             for f in schema.fields
         ]
-    )
-
-
-def _null_fill_missing(df: DataFrame, schema: StructType | None) -> DataFrame:
-    """Add NULL columns for committed-schema fields the frame lacks,
-    keeping every existing column (planner columns like ``__file``
-    included) — what lets a predicate over a METADATA-ONLY added
-    column (``alter_schema(add=...)``) resolve against a scan of files
-    written before the column existed. ``_align`` is the projection
-    form (exact schema, planner columns dropped); this is the
-    additive form for discovery scans that must keep their markers."""
-    if schema is None:
-        return df
-    have = set(df.columns)
-    missing = [f for f in schema.fields if f.name not in have]
-    if not missing:
-        return df
-    return df.select(
-        "*", *[F.lit(None).cast(f.dataType).alias(f.name) for f in missing]
     )
 
 
@@ -2377,14 +2371,13 @@ class ManifestTable:
         schema = self._manifest_schema(man)
         if not man["files"]:
             return spark.createDataFrame([], schema or man["schema"])
-        df = self._read_files(spark, man["files"])
+        df = self._read_files(spark, man["files"], man=man)
         if schema is None:
             return df
         # present the committed (evolved) schema: stable column order,
-        # NULL for columns added after a file was written, renamed
-        # columns resolved from their physical names, and partition
-        # columns (read back as strings — see _read_files) cast to
-        # their committed types
+        # renamed columns resolved from their physical names, and
+        # partition columns (read back as strings — see _read_files)
+        # cast to their committed types
         return _align(df, schema, man.get("column_map"))
 
     def version_as_of(self, timestamp: str) -> int:
@@ -2556,7 +2549,7 @@ class ManifestTable:
         kept = self._plan_read_entries(spark, version, raw, specs, schema, utc)
         if not kept:
             return spark.createDataFrame([], schema or raw["schema"])
-        df = self._read_files(spark, kept)
+        df = self._read_files(spark, kept, man=raw)
         if schema is not None:
             df = _align(df, schema, raw.get("column_map"))
         return df.filter(pred)
@@ -2625,7 +2618,7 @@ class ManifestTable:
                 partial.append(e)
         total = full_rows
         if partial:
-            df = self._read_files(spark, partial)
+            df = self._read_files(spark, partial, man=raw)
             if schema is not None:
                 df = _align(df, schema, cmap)
             total += df.filter(pred).count()
@@ -2930,18 +2923,18 @@ class ManifestTable:
         (``hit``). ``proved`` files match on every row and were never
         opened; ``untouched`` files hold no matching row and carry
         into the next manifest by reference. The predicate speaks
-        LOGICAL names and files store PHYSICAL ones, so the scan
-        renames and NULL-fills committed fields a file predates (a
-        metadata-only ADD COLUMN) before the predicate resolves."""
+        LOGICAL names and files store PHYSICAL ones, so the scan is
+        renamed before the predicate resolves; committed fields a file
+        predates (a metadata-only ADD COLUMN) read as NULL from the
+        typed scan itself."""
         proved, candidates, untouched = self._rewrite_candidates(
             spark, man, schema, where, op
         )
         hit: list[dict] = []
         if candidates:
             inv = {p: l for l, p in (man.get("column_map") or {}).items()}
-            scan = _null_fill_missing(
-                _renamed(self._read_files(spark, candidates, with_file_path=True), inv),
-                schema,
+            scan = _renamed(
+                self._read_files(spark, candidates, man=man, with_file_path=True), inv
             )
             hit_files = {
                 _strip_file_scheme(r["__file"])
@@ -2978,17 +2971,38 @@ class ManifestTable:
         entries: list[dict],
         with_file_path: bool = False,
         with_row_index: bool = False,
+        *,
+        man: dict,
     ) -> DataFrame:
         """Read manifest entries; hive partition columns restored and
         deletion vectors applied.
 
+        ``man`` is the manifest the entries come from, and the reader
+        takes its schema from it, never from parquet footers (Delta's
+        rule: schema and file list come from the log). Every scan is
+        ``spark.read.schema(S)`` over the committed PHYSICAL schema —
+        ``fields`` under their ``column_map`` names (a pre-evolution
+        manifest's ``schema`` string otherwise; the footers only for a
+        manifest that records no schema at all) — with each hive-dir
+        key of the batch as ``string``: partition values come back as
+        raw strings, never inference-typed ('19980101' must not become
+        an int, '000003' must keep its zeros); ``snapshot()`` casts
+        them to the committed schema, the string-in-the-log /
+        cast-on-read contract. A typed read starts no Spark job and
+        reads no footer at plan time; files stored under a lossless
+        narrowing of the committed type (``alter_schema(widen=...)``)
+        read back widened, and files written before a column was
+        added read it as NULL. A file whose physical type is neither
+        fails in the parquet reader when the scan runs.
+
         Files are grouped by their write batch (the uuid directory each
-        commit landed under) because partition inference needs a
-        basePath whose every child segment is ``key=value`` — the batch
-        dir is that root. One scan per batch, unioned; Catalyst still
-        prunes columns/filters into every scan. Batches written before
-        a column was added simply lack it — the union null-fills
-        (additive schema evolution).
+        commit landed under), whose every child segment is
+        ``key=value`` — the batch dir is the scan's basePath. One scan
+        per batch, unioned; Catalyst still prunes columns/filters into
+        every scan. The per-batch split is kept even where one scan
+        would do: it decides how Spark packs files into input splits,
+        and so the layout of the files a MERGE rewrites (and with it
+        later file skipping).
 
         Entries carrying deletion vectors (merge-on-read DELETE) have
         those physical row positions removed via an anti-join on
@@ -3015,17 +3029,31 @@ class ManifestTable:
             # anti-join still yields the correct (empty) result and
             # the scan keeps its schema
             entries = live
-        # hive partition values come back as raw strings, never
-        # inference-typed: '19980101' must not become an int, and
-        # '000003' inferred as 3 would silently lose its leading zeros.
-        # snapshot() casts them to the committed schema — the same
-        # string-in-the-log / cast-on-read contract Delta uses.
-        # Inference runs eagerly inside spark.read.parquet(), so the
-        # conf is scoped to reader construction and restored after —
-        # unrelated reads in the same session keep their own setting.
-        inference_key = "spark.sql.sources.partitionColumnTypeInference.enabled"
-        prev = spark.conf.get(inference_key, None)
-        spark.conf.set(inference_key, "false")
+        has_dv = any(e.get("dv") or e.get("dv_ref") for e in entries)
+        need_file = with_file_path or has_dv
+        need_idx = with_row_index or has_dv
+        meta = []
+        if need_file:
+            meta.append(F.col("_metadata.file_path").alias("__file"))
+        if need_idx:
+            meta.append(F.col("_metadata.row_index").alias("__idx"))
+        committed = self._manifest_schema(man)
+        if committed is None and man.get("schema"):
+            committed = _parse_datatype_string(man["schema"])
+        if committed is None or not committed.fields:
+            # a manifest that records no schema: only the footers know
+            # the data columns (files passed without a basePath, so no
+            # directory is discovered as a column)
+            committed = spark.read.parquet(
+                *[
+                    _hadoop_glob_escape(
+                        os.path.join(e.get("base") or self.data_dir, e["path"])
+                    )
+                    for e in entries
+                ]
+            ).schema
+        cmap = man.get("column_map") or {}
+        physical = {cmap.get(f.name, f.name): f.dataType for f in committed.fields}
         # shallow-cloned entries carry the SOURCE's absolute data dir
         # as "base"; grouping keys on (root, batch) so a clone-local
         # batch and a foreign batch with a colliding uuid never share
@@ -3037,88 +3065,36 @@ class ManifestTable:
             # dir; CONVERTED tables adopt files in place, where the
             # first segment may already be a hive ``key=value`` dir
             # (or the file itself, unpartitioned) — then the table
-            # root IS the basePath, or inference would lose that key
+            # root IS the basePath, or discovery would lose that key
             batch = first if "/" in e["path"] and "=" not in first else ""
             root = e.get("base") or self.data_dir
-            by_batch.setdefault((root, batch), []).append(
-                os.path.join(root, e["path"])
-            )
-        try:
-            dfs = [
-                spark.read.option("basePath", os.path.join(root, batch)).parquet(
-                    *[_hadoop_glob_escape(f) for f in files]
-                )
-                for (root, batch), files in sorted(by_batch.items())
-            ]
-        finally:
-            if prev is None:
-                spark.conf.unset(inference_key)
-            else:
-                spark.conf.set(inference_key, prev)
-        has_dv = any(e.get("dv") or e.get("dv_ref") for e in entries)
-        need_file = with_file_path or has_dv
-        need_idx = with_row_index or has_dv
-        meta = []
-        if need_file:
-            meta.append(F.col("_metadata.file_path").alias("__file"))
-        if need_idx:
-            meta.append(F.col("_metadata.row_index").alias("__idx"))
-        if meta:
-            dfs = [df.select("*", *meta) for df in dfs]
-        if len(dfs) > 1:
-            # partition-spec evolution can leave the SAME column raw-
-            # hive-partitioned in one batch (restored as a directory
-            # string) and physically stored in another (its real
-            # type). Cast the dir-string side to the physical type
-            # before the union — the same string-in-the-log /
-            # cast-on-read contract snapshot() applies, just per batch
-            # so unionByName never sees a type conflict.
-            seen: dict[str, set[str]] = {}
-            for df in dfs:
-                for n, t in df.dtypes:
-                    seen.setdefault(n, set()).add(t)
-            # CONTRACT: a column's dtypes across batches may differ in
-            # exactly two sanctioned ways — hive-dir restoration (the
-            # raw-partitioned side is always string) and TYPE WIDENING
-            # (alter_schema(widen=...): old batches keep the narrow
-            # physical type). Both resolve to the WIDEST stored type
-            # on the lossless lattice (_is_widening); anything else is
-            # real drift — fail loudly instead of dying in unionByName.
-            def _widest(ts: set[str]) -> str | None:
-                cand = [t for t in ts if t != "string"]
-                for w in cand:
-                    if all(t == w or _is_widening(t, w) for t in cand):
-                        return w
-                return None
-
-            fix: dict[str, str] = {}
-            bad: dict[str, set[str]] = {}
-            for n, ts in seen.items():
-                if len(ts) == 1:
-                    continue
-                w = _widest(ts)
-                if w is None:
-                    bad[n] = ts
-                else:
-                    fix[n] = w
-            if bad:
-                raise AssertionError(
-                    f"_read_files: irreconcilable dtypes for one column "
-                    f"across batches {bad} — neither dir-string restoration "
-                    "nor a lossless widening explains the divergence"
-                )
-            if fix:
-                dfs = [
-                    df.select(
-                        *[
-                            F.col(n).cast(fix[n]).alias(n)
-                            if n in fix and t != fix[n]
-                            else F.col(n)
-                            for n, t in df.dtypes
-                        ]
-                    )
-                    for df in dfs
+            by_batch.setdefault((root, batch), []).append(e["path"])
+        scans: list[tuple[set[str], DataFrame]] = []
+        for (root, batch), paths in sorted(by_batch.items()):
+            dirs = {k: None for p in paths for k in _partition_values(p)}
+            schema = StructType(
+                [
+                    StructField(n, StringType() if n in dirs else t)
+                    for n, t in physical.items()
                 ]
+                + [StructField(k, StringType()) for k in dirs if k not in physical]
+            )
+            reader = spark.read.schema(schema)
+            if dirs:
+                reader = reader.option("basePath", os.path.join(root, batch))
+            df = reader.parquet(
+                *[_hadoop_glob_escape(os.path.join(root, p)) for p in paths]
+            )
+            scans.append((set(dirs), df.select("*", *meta) if meta else df))
+        # partition-spec evolution can leave the SAME column raw-hive-
+        # partitioned in one batch (a dir string) and stored in another
+        # (its committed type): cast the dir side so unionByName never
+        # sees a type conflict
+        stored = {n for n in physical if any(n not in d for d, _ in scans)}
+        dfs = []
+        for dirs, df in scans:
+            cast = {n: F.col(n).cast(physical[n]) for n in sorted(dirs & stored)}
+            dfs.append(df.withColumns(cast) if cast else df)
         out = dfs[0]
         for df in dfs[1:]:
             out = out.unionByName(df, allowMissingColumns=True)
@@ -3135,7 +3111,9 @@ class ManifestTable:
                 parts.append(spark.createDataFrame(inline_rows, dv_schema))
             refs = sorted({r for e in entries for r in (e.get("dv_ref") or [])})
             if refs:
-                side = spark.read.parquet(*[os.path.join(self.path, r) for r in refs])
+                side = spark.read.schema(_DV_SIDECAR_SCHEMA).parquet(
+                    *[os.path.join(self.path, r) for r in refs]
+                )
                 parts.append(
                     side.select(
                         F.col("path").alias("__dv_path"), F.col("pos").alias("__dv_pos")
@@ -4253,8 +4231,9 @@ class ManifestTable:
         ``add`` (``{name: spark_type_ddl}``, e.g. ``{"score":
         "double"}``): the committed schema GAINS the fields —
         Delta/Iceberg's metadata-only ADD COLUMN. Existing rows read
-        as NULL (``_align`` NULL-fills columns a file lacks — the same
-        machinery additive append-evolution reads through), so the new
+        as NULL (the typed scan reads a committed column a file lacks
+        as NULL — the same path additive append-evolution reads
+        through), so the new
         fields are always nullable; later appends/merges carry real
         values. Refuses names that collide case-insensitively with a
         live column, with a drop TOMBSTONE, or with an in-use PHYSICAL
@@ -4924,8 +4903,8 @@ class ManifestTable:
             blooms = man.get("bloom_cols")
             new_entries: list[dict] = []
             if touched:
-                kept = _null_fill_missing(
-                    _renamed(self._read_files(spark, touched), inv), schema
+                kept = _renamed(
+                    self._read_files(spark, touched, man=man), inv
                 ).filter(~F.coalesce(pred, F.lit(False)))
                 if schema is not None:
                     kept = _align(kept, schema)
@@ -5628,7 +5607,7 @@ class ManifestTable:
                 # align the touched rows to the evolved schema first, so a
                 # source-introduced column survives merge_upsert's
                 # align-to-target step
-                target = _align(self._read_files(spark, touched), schema, cmap)
+                target = _align(self._read_files(spark, touched, man=man), schema, cmap)
                 if clauses is not None:
                     from etl_job_spark.operators.merge import (
                         _ORDERED_BROADCAST_ROWS,
@@ -5864,12 +5843,9 @@ class ManifestTable:
             cmap = man.get("column_map") or {}
             new_entries: list[dict] = []
             if touched:
-                kept = _null_fill_missing(
-                    _renamed(
-                        self._read_files(spark, touched),
-                        {p: l for l, p in cmap.items()},
-                    ),
-                    schema,
+                kept = _renamed(
+                    self._read_files(spark, touched, man=man),
+                    {p: l for l, p in cmap.items()},
                 ).filter(~F.coalesce(where.pred, F.lit(False)))
                 if schema is not None:
                     kept = _align(kept, schema)
@@ -5963,7 +5939,7 @@ class ManifestTable:
             if not touched:
                 return base  # nothing matched; no new version
 
-            rows = _align(self._read_files(spark, touched), schema, cmap)
+            rows = _align(self._read_files(spark, touched, man=man), schema, cmap)
             hit_row = F.coalesce(where_.pred, F.lit(False))
             updated = rows.select(
                 *[
@@ -6032,15 +6008,11 @@ class ManifestTable:
             # already-deleted row is a no-op — new positions are always
             # disjoint from recorded ones, and counts add exactly.
             # The predicate speaks LOGICAL names; files store PHYSICAL
-            # (NULL-filled for metadata-only added columns)
-            scan = _null_fill_missing(
-                _renamed(
-                    self._read_files(
-                        spark, candidates, with_file_path=True, with_row_index=True
-                    ),
-                    {p: l for l, p in (man.get("column_map") or {}).items()},
+            scan = _renamed(
+                self._read_files(
+                    spark, candidates, man=man, with_file_path=True, with_row_index=True
                 ),
-                schema,
+                {p: l for l, p in (man.get("column_map") or {}).items()},
             )
             matched = scan.filter(where.pred).select(
                 _rel_path_col(self.data_dir).alias("__dv_path"),
@@ -6156,16 +6128,17 @@ class ManifestTable:
             return empty.withColumn("_change", F.lit("upsert"))
         schema = self._manifest_schema(b)
 
-        def _rd(entries: list[dict]) -> DataFrame:
-            df = self._read_files(spark, entries)
+        def _rd(entries: list[dict], man: dict) -> DataFrame:
+            # each side reads under the manifest its files come from;
             # files of BOTH versions store physical names; present the
             # to-version's logical view
+            df = self._read_files(spark, entries, man=man)
             return (
                 _align(df, schema, b.get("column_map")) if schema is not None else df
             )
 
-        old = _rd(only_a) if only_a else None
-        new = _rd(only_b) if only_b else None
+        old = _rd(only_a, a) if only_a else None
+        new = _rd(only_b, b) if only_b else None
         if old is None:
             return new.withColumn("_change", F.lit("upsert"))
         if new is None:
@@ -6343,7 +6316,7 @@ class ManifestTable:
             schema = self._manifest_schema(man)
             new_entries: list[dict] = []
             if rewrite:
-                df = self._read_files(spark, rewrite)
+                df = self._read_files(spark, rewrite, man=man)
                 if schema is not None:
                     # align to the logical view (applies DVs/evolution),
                     # then back to physical names for the rewrite

@@ -209,10 +209,10 @@ def _discovery_scans(monkeypatch) -> list[int]:
     sent: list[int] = []
     real = ManifestTable._read_files
 
-    def spy(self, spark, entries, with_file_path=False, with_row_index=False):
+    def spy(self, spark, entries, with_file_path=False, with_row_index=False, *, man):
         if with_file_path:
             sent.append(len(entries))
-        return real(self, spark, entries, with_file_path, with_row_index)
+        return real(self, spark, entries, with_file_path, with_row_index, man=man)
 
     monkeypatch.setattr(ManifestTable, "_read_files", spy)
     return sent
