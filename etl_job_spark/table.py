@@ -699,69 +699,6 @@ def _stat_probe_encode(v, kind: str | None, utc: bool = True):
     return _stat_encode(v)
 
 
-def _probe_outside(e, fmin, fmax) -> bool:
-    """True when probe value ``e`` is PROVABLY outside the recorded
-    ``[fmin, fmax]`` under Spark's own comparison semantics (the bar a
-    delete/merge planner must clear before skipping a file).
-
-    Exact Python comparison agrees with Spark except for one corner:
-    Spark compares bigint against double by casting the bigint side to
-    double, which is lossy at or beyond 2**53 — a stored int64 whose
-    double form equals the probe can sit outside the probe's exact
-    position. Cross-type comparisons where either side reaches 2**53
-    therefore never exclude (unknown = possibly present). Same-type
-    comparisons (bigint=bigint, double=double, str=str) are exact on
-    both engines at any magnitude, so snowflake-scale integer keys
-    keep pruning."""
-    if e is None or not _comparable(e, fmin):
-        return False
-    if isinstance(e, dict):  # decimal family: exact at any magnitude
-        return _enc_order(e) < _enc_order(fmin) or _enc_order(e) > _enc_order(fmax)
-    if isinstance(e, (int, float)) and type(e) is not type(fmin):
-        big = 2**53
-        if abs(e) >= big or abs(fmin) >= big or abs(fmax) >= big:
-            return False
-    return e < fmin or e > fmax
-
-
-def _envelope_outside(
-    st: dict, vals: list, kind: str | None = None, utc: bool = True
-) -> bool:
-    """Range check of a probe SET's overall min/max against a file's
-    recorded range — the only test cheap enough for oversized value
-    sets (> ``_BLOOM_PROBE_MAX``), and sound: if even the set's
-    envelope misses the file's range entirely, no member can hit it.
-    Any un-encodable value keeps the file (it might match anywhere)."""
-    enc = [_stat_probe_encode(v, kind, utc) for v in vals]
-    if any(e is None for e in enc):
-        return False
-    fmin, fmax = st.get("min"), st.get("max")
-    if fmin is None or fmax is None:  # nulls-only stats entry
-        return False
-    if not all(_comparable(e, fmin) for e in enc):
-        return False
-    big = 2**53
-    stored_big = (
-        isinstance(fmin, (int, float)) and (abs(fmin) >= big or abs(fmax) >= big)
-    )
-    if any(
-        isinstance(e, (int, float))
-        and type(e) is not type(fmin)
-        and (abs(e) >= big or stored_big)
-        for e in enc
-    ):
-        # EVERY member must clear the lossy-cast bar, not just the
-        # endpoints: a cross-type member past 2**53 (on either side)
-        # can double-cast-equal a stored value the endpoints prune
-        # around
-        return False
-    # the WHOLE envelope must sit on one side of the file's range —
-    # a straddling envelope can hide members inside the range
-    ordv = [_enc_order(e) for e in enc]
-    lo, hi = min(ordv), max(ordv)
-    return hi < _enc_order(fmin) or lo > _enc_order(fmax)
-
-
 def _session_utc(spark: SparkSession) -> bool:
     """True when BOTH timezone knobs that bend timezone-sensitive
     pruning are UTC: the SESSION zone (governs SQL string literals,
@@ -794,39 +731,6 @@ def _comparable(a, b) -> bool:
     if isinstance(a, (int, float)) and isinstance(b, (int, float)):
         return True
     return isinstance(a, str) and isinstance(b, str)
-
-
-def _range_excludes(
-    st: dict, op: str, v, kind: str | None = None, utc: bool = True
-) -> bool:
-    """True when a file's recorded ``[min, max]`` proves NO row can
-    satisfy ``col <op> v`` — the inequality half of read-path data
-    skipping. Un-encodable probes, unit-mismatched temporal probes
-    (``_stat_probe_encode``), and lossy cross-type comparisons
-    (see ``_probe_outside``) never exclude."""
-    e = _stat_probe_encode(v, kind, utc)
-    if e is None:
-        return False
-    fmin, fmax = st.get("min"), st.get("max")
-    if fmin is None or fmax is None:  # nulls-only stats entry
-        return False
-    if not _comparable(e, fmin):
-        return False
-    if isinstance(e, dict):  # decimal family: exact at any magnitude
-        e, fmin, fmax = _enc_order(e), _enc_order(fmin), _enc_order(fmax)
-    elif isinstance(e, (int, float)) and type(e) is not type(fmin):
-        big = 2**53
-        if abs(e) >= big or abs(fmin) >= big or abs(fmax) >= big:
-            return False
-    if op == ">=":
-        return fmax < e
-    if op == ">":
-        return fmax <= e
-    if op == "<=":
-        return fmin > e
-    if op == "<":
-        return fmin >= e
-    return False
 
 
 # sentinels for partition-constant reasoning: a partition value either
@@ -910,72 +814,6 @@ def _canon_partition(x, kind):
     return _PART_UNKNOWN
 
 
-def _part_match_possible(pv: str | None, vals: list, kind: str | None) -> bool:
-    """Whether a file-constant hive partition value ``pv`` can satisfy
-    ``col IN vals`` under the column's committed type ``kind``. A NULL
-    partition value satisfies nothing (SQL IN); probes whose implicit
-    cast provably nulls out match nothing; anything we can't reason
-    about soundly keeps the file."""
-    if pv is None:
-        return False
-    # a MIXED string+numeric IN list makes Spark promote the WHOLE
-    # comparison to double — string members then also match
-    # numerically ('01' matches stored '1'), so the byte-wise string
-    # fast path is only sound when every member is a string
-    numeric_promoted = kind == "string" and any(not isinstance(x, str) for x in vals)
-    for x in vals:
-        if kind == "string" and isinstance(x, str) and not numeric_promoted:
-            if pv == x:
-                return True
-            continue
-        if kind is None:
-            return True  # pre-evolution manifest: no type info, keep
-        if kind == "string":
-            cpv = _canon_partition(pv, "double")
-            cx = _canon_partition(x, "double") if isinstance(x, str) else (
-                _canon_partition(x, "string")
-            )
-        else:
-            cpv = _canon_partition(pv, kind)
-            cx = _canon_partition(x, kind)
-        if cpv is _PART_UNKNOWN or cx is _PART_UNKNOWN:
-            return True
-        if cpv is None or cx is None:
-            continue  # a NULL side never equals anything
-        if cpv == cx:
-            return True
-    return False
-
-
-def _part_range_excludes(pv: str | None, op: str, v, kind: str | None) -> bool:
-    """Whether the file-constant partition value ``pv`` PROVABLY fails
-    ``col <op> v``. NULL partition values fail every comparison (the
-    whole file is excludable); unsound canonicalizations never
-    exclude."""
-    if pv is None:
-        return True
-    if kind == "string" and isinstance(v, str):
-        cpv, cx = pv, v
-    else:
-        if kind is None:
-            return False
-        cpv = _canon_partition(pv, "double" if kind == "string" else kind)
-        cx = _canon_partition(v, kind)
-        if cpv is _PART_UNKNOWN or cx is _PART_UNKNOWN:
-            return False
-        if cpv is None or cx is None:
-            return True  # a NULL side satisfies no comparison
-    if op == ">=":
-        return not cpv >= cx
-    if op == ">":
-        return not cpv > cx
-    if op == "<=":
-        return not cpv <= cx
-    if op == "<":
-        return not cpv < cx
-    return False
-
-
 def predicate_column(predicates: Sequence[tuple]) -> Column:
     """The conjunctive predicate spec as one Spark ``Column`` — the
     SAME spec ``_prune_by_key_stats`` plans from, so the residual
@@ -1015,9 +853,9 @@ def predicate_column(predicates: Sequence[tuple]) -> Column:
 
 
 class _SpecText(list):
-    """A predicate spec parsed from SQL text: the row verbs plan from
-    the spec, and history records the text the statement was written
-    with."""
+    """A predicate spec with the text history records for it: the row
+    verbs plan from the spec; a spec parsed from SQL keeps the
+    statement's text, ``delete_keys``' IN spec its value-count summary."""
 
     def __init__(self, spec: Sequence[tuple], text: str):
         super().__init__(spec)
@@ -1029,47 +867,20 @@ class _Where(NamedTuple):
 
     pred: Column  # the row filter (NULL never matches)
     spec: list[tuple] | None  # conjunctive spec: metadata prune + all-match proof
-    values: dict[str, list] | None  # values probe (``delete_keys``)
     text: str  # the recorded history predicate
 
 
-def _where_form(
-    where: str | Column | Sequence[tuple],
-    values: dict[str, list] | None = None,
-    text: str | None = None,
-) -> _Where:
+def _where_form(where: str | Column | Sequence[tuple]) -> _Where:
     """``where`` as a str, a Column, or a predicate spec (the
     ``snapshot_where`` tuple form, validated here, before any commit
-    attempt)."""
+    attempt; a ``_SpecText`` spec records its own text)."""
     if isinstance(where, (list, tuple)):
         spec = _normalize_predicates(where)
-        text = text or getattr(where, "text", None) or str(spec)
-        return _Where(predicate_column(spec), spec, values, text)
+        text = getattr(where, "text", None) or str(spec)
+        return _Where(predicate_column(spec), spec, text)
     if isinstance(where, str):
-        return _Where(F.expr(where), None, values, text or where)
-    return _Where(where, None, values, text or str(where))
-
-
-def _stats_disjoint(entry: dict, key_ranges: dict[str, tuple]) -> bool:
-    """True when ``entry``'s recorded min/max prove the file holds no
-    row whose key columns all fall inside the source's ranges — i.e.
-    the file provably contains no mergeable key and can be carried by
-    reference. One provably-disjoint key column suffices (a matching
-    row would need EVERY key column inside both ranges). Missing or
-    incomparable stats never prune — unknown means "possibly touched"."""
-    stats = entry.get("stats") or {}
-    for col, (lo, hi) in key_ranges.items():
-        st = stats.get(col)
-        if st is None:
-            continue
-        fmin, fmax = st.get("min"), st.get("max")
-        if fmin is None or fmax is None:  # nulls-only stats entry
-            continue
-        if not (_comparable(fmin, lo) and _comparable(fmax, hi)):
-            continue
-        if _enc_order(fmax) < _enc_order(lo) or _enc_order(fmin) > _enc_order(hi):
-            return True
-    return False
+        return _Where(F.expr(where), None, where)
+    return _Where(where, None, str(where))
 
 
 def _strip_file_scheme(path: str) -> str:
@@ -1328,75 +1139,13 @@ def _file_blooms(path: str, cols: Sequence[str]) -> dict[str, dict]:
     return out
 
 
-# widen timestamp_ntz source bounds by this under a non-UTC session:
-# the from_utc_timestamp re-encoding is exact except for wall clocks
-# inside a DST transition window, where the zone offset used can be
-# off by the DST shift. A day's margin swamps any legal offset
-# (±14 h) + DST (1 h) while costing a daily-window merge essentially
-# no pruning. Applied only when the session zone isn't UTC — the
-# UTC-pinned common case keeps exact bounds.
-_NTZ_SKEW_MARGIN_MICROS = 26 * 3600 * 1_000_000
-
-
-def _source_key_ranges(source: DataFrame, keys: Sequence[str]) -> dict[str, tuple]:
-    """min/max of each key column in the source — ONE aggregate job
-    returning a single row of 2×len(keys) scalars (driver-side size is
-    fixed, not data-sized). Temporal columns aggregate as epoch
-    integers (unix_micros/unix_date — tz-independent, matching
-    ``_stat_encode``'s footer encoding exactly); columns whose bounds
-    can't be order-preservingly encoded (or that are all-NULL) are
-    omitted and simply don't prune.
-
-    ``timestamp_ntz`` keys need care: parquet footers record NTZ
-    values as bare wall clocks, which ``_stat_encode`` encodes as
-    wall-as-UTC micros. ``unix_micros(cast(ntz as timestamp))``
-    interprets the wall clock in the SESSION zone — under a non-UTC
-    session the two encodings differ by the zone offset and an
-    overlapping file could be wrongly pruned (silently lost updates).
-    ``from_utc_timestamp(cast(...), session_zone)`` undoes the session
-    interpretation (verified: recovers wall-as-UTC under Asia/Seoul),
-    and a one-day safety margin covers DST-transition wall clocks
-    where the offset arithmetic can be off by the shift."""
-    dtypes = dict(source.dtypes)
-    session_tz = source.sparkSession.conf.get("spark.sql.session.timeZone")
-    ntz_margin = 0 if session_tz == "UTC" else _NTZ_SKEW_MARGIN_MICROS
-    ntz_cols = set()
-    aggs = []
-    for k in keys:
-        dt = dtypes.get(k, "")
-        if dt == "timestamp_ntz":
-            expr = F.unix_micros(
-                F.from_utc_timestamp(F.col(k).cast("timestamp"), session_tz)
-            )
-            ntz_cols.add(k)
-        elif dt.startswith("timestamp"):
-            expr = F.unix_micros(F.col(k).cast("timestamp"))
-        elif dt == "date":
-            expr = F.unix_date(F.col(k))
-        else:
-            expr = F.col(k)
-        aggs.append(F.min(expr).alias(f"__lo_{k}"))
-        aggs.append(F.max(expr).alias(f"__hi_{k}"))
-    row = source.agg(*aggs).collect()[0]
-    out: dict[str, tuple] = {}
-    for k in keys:
-        lo = _stat_encode(row[f"__lo_{k}"])
-        hi = _stat_encode(row[f"__hi_{k}"])
-        if lo is not None and hi is not None:
-            if k in ntz_cols and ntz_margin:
-                lo, hi = lo - ntz_margin, hi + ntz_margin
-            out[k] = (lo, hi)
-    return out
-
-
 def _source_key_bounds(source: DataFrame, keys: Sequence[str]) -> dict[str, tuple]:
     """RAW min/max of each key column — one aggregate job, a fixed
-    2×len(keys) scalars on the driver. Unlike ``_source_key_ranges``
-    (footer-ENCODED, for ``_stats_disjoint``), these are plain Python
-    values shaped as PREDICATE PROBES: ``_entry_matches_stats``
-    normalizes and encodes them per column itself, which is what lets
-    the merge range prune reason from partition constants and
-    spec-history transform dirs too — not only footer stats. All-NULL
+    2×len(keys) scalars on the driver. These are plain Python values
+    shaped as PREDICATE PROBES: the merge range prune hands them to
+    ``_verdict`` as a BETWEEN spec, which normalizes and encodes them
+    per column itself, so the prune reasons from partition constants
+    and spec-history transform dirs too — not only footer stats. All-NULL
     or absent columns are omitted (a NULL source key never matches a
     target row, so it cannot make a file touched)."""
     present = [k for k in keys if k in source.columns]
@@ -1684,40 +1433,6 @@ def _transform_probe(field: "_PartitionField", v, col_kind: str | None = None):
     return _PART_UNKNOWN
 
 
-def _entry_stats_may_contain(
-    entry: dict,
-    values_by_col: dict[str, list],
-    types: dict[str, str] | None = None,
-    utc: bool = True,
-) -> bool:
-    """The STATS half of ``_entry_may_contain`` — a pure function of
-    the entry dict, so distributed planning can ship it to executors
-    (blooms need sidecar file reads keyed through the table instance
-    and stay a driver-side pass over the survivors)."""
-    stats = entry.get("stats") or {}
-    types = types or {}
-    for col, values in values_by_col.items():
-        vals = [v for v in values if v is not None]
-        if not vals:
-            continue
-        st = stats.get(col)
-        kind = types.get(col)
-        if len(vals) > _BLOOM_PROBE_MAX:
-            # oversized sets skip the per-value tests (cost) but
-            # still range-prune on the set's overall envelope
-            if st is not None and _envelope_outside(st, vals, kind, utc):
-                return False
-            continue
-        if st is not None and st.get("min") is not None:
-            fmin, fmax = st["min"], st["max"]
-            if all(
-                _probe_outside(_stat_probe_encode(v, kind, utc), fmin, fmax)
-                for v in vals
-            ):
-                return False
-    return True
-
-
 def _bind_naive(v):
     """Naive-datetime probe → aware, with the DRIVER process's local
     zone attached. ``TimestampType().toInternal`` converts naive
@@ -1777,261 +1492,257 @@ def _normalize_predicates(predicates: Sequence[tuple]) -> list[tuple]:
     return norm
 
 
-def _entry_matches_stats(
-    entry: dict,
-    constraints: list[tuple],
-    part_types: dict[str, str],
-    tmap: dict[str, tuple["_PartitionField", ...]] | None = None,
-    utc: bool = True,
-) -> bool:
-    """False only when some conjunctive constraint PROVABLY holds for
-    no row of the file, judged from the entry dict alone (partition
-    constants, transform dirs, footer stats — everything except bloom
-    sidecars). Pure and picklable: this is the per-entry matcher the
-    distributed planner ships to executors; the in-memory planner runs
-    the same function, then layers blooms on top
-    (``ManifestTable._entry_matches_possible``).
+# -- file skipping: one three-valued verdict --------------------------
+#
+# Every metadata prune asks one question of a file entry: do NONE,
+# SOME or ALL of its rows satisfy a conjunctive spec? Reads,
+# count_where, the row verbs, MERGE's range and bloom tiers,
+# delete_keys and scoped OPTIMIZE all ask it through ``_verdict``,
+# which judges each constraint against every fact the entry holds — a
+# raw partition constant (a point), spec-history transform dirs
+# (points in the transformed domain), and footer [min, max] with NULL
+# and row counts. Callers keep a file when the verdict is not NONE and
+# count or take it unopened when it is ALL: Iceberg's inclusive and
+# strict metrics evaluators in one function. Unknown is always SOME —
+# an un-encodable probe, a lossy cross-type comparison or a missing
+# fact neither prunes nor proves.
 
-    ``tmap`` maps source column → the transform fields of the spec
-    HISTORY (``_prune_tmap``); only fields whose dirname the entry's
-    own partition dict actually carries apply — entries written under
-    a different spec simply skip the transform tests (sound: absence
-    proves nothing)."""
+_NONE, _SOME, _ALL = 0, 1, 2
+
+# op -> (NONE when, ALL when) for a probe ``e`` against a recorded
+# [lo, hi] (a point is lo == hi). Written out per op, not as
+# "not op(...)", so a test that meets a NaN — every Python comparison
+# False — neither prunes nor proves. The other bound still may: float
+# stats record NaN as the max (parquet-java; ``fold_float_stats`` on
+# the fused route), and NaN is Spark's largest double, so a non-NaN
+# min stays a sound lower bound.
+_RANGE_TESTS = {
+    ">=": (lambda e, lo, hi: hi < e, lambda e, lo, hi: lo >= e),
+    ">": (lambda e, lo, hi: hi <= e, lambda e, lo, hi: lo > e),
+    "<=": (lambda e, lo, hi: lo > e, lambda e, lo, hi: hi <= e),
+    "<": (lambda e, lo, hi: lo >= e, lambda e, lo, hi: hi < e),
+}
+
+
+class _PruneCtx(NamedTuple):
+    """What ``_verdict`` needs besides the entry, built once per
+    manifest (``_prune_ctx``): committed types under PHYSICAL names
+    (probes refuse unit-mismatched encodings), the spec-history
+    transform map (``_prune_tmap``), the UTC gate (``_session_utc``)
+    and the logical → physical ``column_map``. Picklable, so the
+    distributed planning tiers ship it to executors."""
+
+    types: dict[str, str]
+    tmap: dict[str, tuple["_PartitionField", ...]]
+    utc: bool
+    cmap: dict[str, str]
+
+    def spec(self, predicates: Sequence[tuple]) -> list[tuple]:
+        """A LOGICAL predicate spec → normalized constraints over the
+        PHYSICAL names stats, partition dirs and blooms are keyed by."""
+        return [
+            (self.cmap.get(col, col), op, v)
+            for col, op, v in _normalize_predicates(predicates)
+        ]
+
+
+def _prune_ctx(man: dict, utc: bool, schema: StructType | None = None) -> _PruneCtx:
+    """The verdict context of manifest ``man``; ``schema`` defaults to
+    its committed one (a pre-evolution manifest has none: no types, so
+    temporal and decimal probes never prune)."""
+    if schema is None:
+        schema = ManifestTable._manifest_schema(man)
+    cmap = man.get("column_map") or {}
+    types = {
+        cmap.get(f.name, f.name): f.dataType.simpleString()
+        for f in (schema.fields if schema else [])
+    }
+    tmap = _prune_tmap(man.get("partition_by"), man.get("partition_specs"), utc)
+    return _PruneCtx(types, tmap, utc, cmap)
+
+
+def _ordered(e, lo, hi):
+    """``(e, lo, hi)`` as mutually orderable values, or None when
+    ordering the probe encoding ``e`` against a recorded ``[lo, hi]``
+    could disagree with Spark: a missing side, a family mismatch
+    (``_comparable``), or the one lossy corner — Spark compares bigint
+    against double by casting the bigint side to double, inexact at or
+    beyond 2**53, so a cross-type comparison where any of the three
+    reaches it is unknown. Same-type comparisons are exact at any
+    magnitude (snowflake-scale integer keys keep pruning), and decimal
+    encodings order exactly through ``_enc_order``."""
+    if e is None or lo is None or hi is None or not _comparable(e, lo):
+        return None
+    if isinstance(e, dict):
+        return _enc_order(e), _enc_order(lo), _enc_order(hi)
+    if isinstance(e, (int, float)) and type(e) is not type(lo):
+        if any(abs(x) >= 2**53 for x in (e, lo, hi)):
+            return None
+    return e, lo, hi
+
+
+def _part_pair(pv: str | None, x, kind: str | None, promoted: bool = False):
+    """Partition-dir value ``pv`` and probe ``x`` as one comparable
+    pair under Spark's implicit cast for a column of type ``kind``:
+    None when either side is NULL after the cast (matches nothing),
+    ``_PART_UNKNOWN`` when no sound mapping exists. A string column
+    compares byte-wise against a string probe and numerically against
+    a numeric one — and against every member of an IN list that mixes
+    the two (``promoted``: Spark widens the whole list to double, so
+    '01' matches a stored '1')."""
+    if pv is None:
+        return None
+    if kind == "string" and isinstance(x, str) and not promoted:
+        return pv, x
+    if kind is None:
+        return _PART_UNKNOWN  # pre-evolution manifest: no type info
+    if kind == "string":
+        a = _canon_partition(pv, "double")
+        b = _canon_partition(x, "double" if isinstance(x, str) else "string")
+    else:
+        a, b = _canon_partition(pv, kind), _canon_partition(x, kind)
+    if a is _PART_UNKNOWN or b is _PART_UNKNOWN:
+        return _PART_UNKNOWN
+    if a is None or b is None:
+        return None
+    return a, b
+
+
+def _point_verdict(pv: str | None, op: str, v, kind: str | None) -> int:
+    """A constraint on a raw partition column: every row of the file
+    holds the dir value ``pv`` (NULL dir ⇔ every row NULL), so the
+    answer is exact wherever the cast is sound."""
+    if op in ("is_null", "not_null"):
+        return _ALL if (pv is None) == (op == "is_null") else _NONE
+    if op == "in":
+        promoted = kind == "string" and any(not isinstance(x, str) for x in v)
+        pairs = [_part_pair(pv, x, kind, promoted) for x in v]
+        if any(p is _PART_UNKNOWN for p in pairs):
+            return _SOME
+        return _ALL if any(p is not None and p[0] == p[1] for p in pairs) else _NONE
+    pair = _part_pair(pv, v, kind)
+    if pair is _PART_UNKNOWN:
+        return _SOME
+    if pair is None:
+        return _NONE
+    _, all_when = _RANGE_TESTS[op]
+    return _ALL if all_when(pair[1], pair[0], pair[0]) else _NONE
+
+
+def _dir_verdict(dv: str | None, field: "_PartitionField", op: str, v, kind) -> int:
+    """A constraint on the source column of transform dir ``dv`` — a
+    point in the transformed domain. Every transform is
+    null-preserving (date_format, md5-bucket, substring/arith truncate
+    all yield NULL for NULL), so a NULL dir holds only NULL sources and
+    a non-NULL one none. Beyond nullness a dir can only exclude: an IN
+    set none of whose members lands in ``dv``, or a range on a monotone
+    floor transform (hours/days/months/truncate: ``x >= v ⇒ t(x) >=
+    t(v)``) that ``dv`` sits wholly outside."""
+    if dv is None:
+        return _ALL if op == "is_null" else _NONE
+    if op in ("is_null", "not_null"):
+        return _ALL if op == "not_null" else _NONE
+    if op == "in":
+        lands = [_transform_probe(field, x, kind) for x in v]
+        if all(d is not _PART_UNKNOWN for d in lands) and dv not in lands:
+            return _NONE
+        return _SOME
+    if field.kind == "bucket":
+        return _SOME  # hashing keeps no order
+    a, b = dv, _transform_probe(field, v, kind)
+    if b is _PART_UNKNOWN:
+        return _SOME
+    if field.kind == "truncate" and kind in _WIDEN_INTS:
+        # integer-truncate dirs compare NUMERICALLY: '10' < '9' as text
+        try:
+            a, b = int(a), int(b)
+        except ValueError:
+            return _SOME
+    if op in (">=", ">"):
+        return _NONE if a < b else _SOME
+    return _NONE if a > b else _SOME
+
+
+def _stats_verdict(entry: dict, col: str, op: str, v, kind, utc: bool) -> int:
+    """A constraint against the footer facts of ``col``: ``[min, max]``
+    over its non-NULL values, its NULL count and the file's row count.
+    A comparison proves ALL only with a RECORDED zero NULL count (a
+    NULL row satisfies no comparison); parquet's possibly-truncated
+    binary min/max stay sound both ways, truncation only widens the
+    range. An IN set excludes when every member falls outside the
+    range — past ``_BLOOM_PROBE_MAX`` members only when the whole set
+    sits on one side of it (the set's envelope)."""
+    st = (entry.get("stats") or {}).get(col) or {}
+    n, rows = st.get("nulls"), entry.get("rows") or 0
+    if op in ("is_null", "not_null"):
+        if n is None:
+            return _SOME
+        if op == "is_null":
+            return _NONE if n == 0 else _ALL if n >= rows else _SOME
+        return _NONE if rows and n >= rows else _ALL if n == 0 else _SOME
+    lo, hi = st.get("min"), st.get("max")
+    if op == "in":
+        ords = [_ordered(_stat_probe_encode(x, kind, utc), lo, hi) for x in v]
+        # each member below (-1) or above (+1) the range; 0 = inside or unknown
+        sides = {
+            0 if o is None else -1 if o[0] < o[1] else 1 if o[0] > o[2] else 0
+            for o in ords
+        }
+        if 0 not in sides and (len(v) <= _BLOOM_PROBE_MAX or len(sides) == 1):
+            return _NONE
+        if n == 0 and any(o is not None and o[0] == o[1] == o[2] for o in ords):
+            return _ALL
+        return _SOME
+    o = _ordered(_stat_probe_encode(v, kind, utc), lo, hi)
+    if o is None:
+        return _SOME
+    none_when, all_when = _RANGE_TESTS[op]
+    if none_when(*o):
+        return _NONE
+    return _ALL if n == 0 and all_when(*o) else _SOME
+
+
+def _constraint_verdict(entry: dict, col: str, op: str, v, ctx: _PruneCtx) -> int:
+    """One normalized constraint against every fact ``entry`` holds on
+    ``col``: NONE if any fact excludes it, else ALL if any proves it."""
+    if op == "in":
+        v = [x for x in v if x is not None]
+        if not v:
+            return _NONE  # IN (NULL, …) matches nothing
+    elif op not in ("is_null", "not_null") and v is None:
+        return _NONE  # a NULL comparison matches nothing
     part = entry.get("partition") or {}
-    stats = entry.get("stats") or {}
-    tmap = tmap or {}
+    kind = ctx.types.get(col)
+    if col in part:  # a raw partition column is not in the data files
+        return _point_verdict(part[col], op, v, kind)
+    # only the spec-history fields whose dirname this entry carries
+    # apply: an entry written under another spec has no such fact
+    facts = [
+        _dir_verdict(part[f.dirname], f, op, v, kind)
+        for f in ctx.tmap.get(col, ())
+        if f.dirname in part
+    ]
+    facts.append(_stats_verdict(entry, col, op, v, kind, ctx.utc))
+    return _NONE if _NONE in facts else max(facts)
+
+
+def _verdict(entry: dict, constraints: list[tuple], ctx: _PruneCtx) -> int:
+    """``_NONE`` when the entry's metadata proves no row satisfies the
+    conjunction of normalized ``constraints`` (``_PruneCtx.spec``),
+    ``_ALL`` when it proves every row does, ``_SOME`` otherwise. Judged
+    from the entry dict alone — bloom sidecars are the one fact it
+    leaves out (``ManifestTable._entry_matches_possible`` layers them
+    on) — so the function is pure and picklable: the distributed
+    planning tiers run it on the executors. A file with no rows never
+    proves ALL; deletion vectors are the callers' concern (the footer
+    describes the physical rows)."""
+    out = _ALL if (entry.get("rows") or 0) > 0 else _SOME
     for col, op, v in constraints:
-        t_fields = [f for f in (tmap.get(col) or ()) if f.dirname in part]
-        if op in ("is_null", "not_null"):
-            want_null = op == "is_null"
-            if col in part:
-                # file-constant partition value: NULL dir ⇔ every row
-                # NULL, non-NULL dir ⇔ every row that exact value
-                if (part[col] is None) != want_null:
-                    return False
-                continue
-            if t_fields:
-                # every transform is null-preserving (date_format,
-                # md5-bucket, substring/arith truncate all yield NULL
-                # for NULL input), so a non-NULL dir proves zero NULL
-                # sources and a NULL dir proves all-NULL sources
-                if (part[t_fields[0].dirname] is None) != want_null:
-                    return False
-                continue
-            st = stats.get(col) or {}
-            n = st.get("nulls")
-            if n is not None:
-                if want_null and n == 0:
-                    return False
-                rows = entry.get("rows")
-                if not want_null and rows and n >= rows:
-                    return False
-            continue
-        if op == "in":
-            vals = [x for x in v if x is not None]
-            if not vals:
-                return False  # IN (NULL…) matches nothing
-            if col in part:
-                if not _part_match_possible(part[col], vals, part_types.get(col)):
-                    return False
-                continue  # raw partition col: not in the data files
-            for field in t_fields:
-                pv = part[field.dirname]
-                if pv is None:
-                    return False  # every source value in the file is NULL
-                dvs = [
-                    _transform_probe(field, x, part_types.get(col)) for x in vals
-                ]
-                if all(d is not _PART_UNKNOWN for d in dvs) and pv not in set(dvs):
-                    return False
-            if not _entry_stats_may_contain(entry, {col: vals}, part_types, utc):
-                return False
-        else:
-            if v is None:
-                return False  # NULL comparison matches nothing
-            if col in part:
-                if _part_range_excludes(part[col], op, v, part_types.get(col)):
-                    return False
-                continue
-            for field in t_fields:
-                if field.kind not in ("hours", "days", "months", "truncate"):
-                    continue
-                # monotonic floor transforms: x >= v ⇒ t(x) >= t(v)
-                pv = part[field.dirname]
-                if pv is None:
-                    return False
-                col_kind = part_types.get(col)
-                dv = _transform_probe(field, v, col_kind)
-                if dv is not _PART_UNKNOWN:
-                    a, b = pv, dv
-                    if field.kind == "truncate" and col_kind in (
-                        "tinyint", "smallint", "int", "bigint",
-                    ):
-                        # integer-truncate dirs compare NUMERICALLY:
-                        # '10' < '9' lexicographically would mis-prune
-                        try:
-                            a, b = int(pv), int(dv)
-                        except ValueError:
-                            a = b = None
-                    if a is not None:
-                        if op in (">=", ">") and a < b:
-                            return False
-                        if op in ("<=", "<") and a > b:
-                            return False
-            st = stats.get(col)
-            if st is not None and _range_excludes(
-                st, op, v, part_types.get(col), utc
-            ):
-                return False
-    return True
-
-
-def _enc_exact_eq(e, f) -> bool:
-    """True only when two stat encodings PROVABLY denote the same
-    value: same family, and no cross-type comparison that could lie
-    (int/float above 2^53, bool/int aliasing). Unprovable = False."""
-    if isinstance(e, dict) or isinstance(f, dict):
-        if isinstance(e, dict) and isinstance(f, dict):
-            try:
-                return decimal.Decimal(e["dec"]) == decimal.Decimal(f["dec"])
-            except Exception:
-                return False
-        return False
-    if isinstance(e, bool) or isinstance(f, bool):
-        return False
-    if isinstance(e, str) != isinstance(f, str):
-        return False
-    if isinstance(e, str):
-        return e == f
-    if not isinstance(e, (int, float)) or not isinstance(f, (int, float)):
-        return False
-    if type(e) is not type(f) and (abs(e) >= 2**53 or abs(f) >= 2**53):
-        return False
-    return e == f
-
-
-def _entry_all_match(
-    entry: dict,
-    constraints: list[tuple],
-    part_types: dict[str, str],
-    tmap: dict[str, tuple["_PartitionField", ...]] | None = None,
-    utc: bool = True,
-) -> bool:
-    """True only when the entry's metadata PROVES every row satisfies
-    every conjunctive constraint — the positive dual of
-    ``_entry_matches_stats``, and the test that lets ``count_where``
-    count a file from its footer row count without scanning it.
-
-    Soundness leans the opposite way from the exclusion matcher:
-    anything unprovable returns False (the file just gets scanned),
-    and comparison constraints additionally require a RECORDED ZERO
-    null count (a NULL row satisfies no comparison, so stats ranges
-    alone can never prove all-match). Parquet's possibly-truncated
-    binary min/max stay sound here too: truncation only widens the
-    recorded range, and all-match tests against the wide bounds."""
-    part = entry.get("partition") or {}
-    stats = entry.get("stats") or {}
-    rows = entry.get("rows") or 0
-    tmap = tmap or {}
-    if rows <= 0:
-        return False
-    for col, op, v in constraints:
-        t_fields = [f for f in (tmap.get(col) or ()) if f.dirname in part]
-        if op in ("is_null", "not_null"):
-            want_null = op == "is_null"
-            if col in part:
-                if (part[col] is None) == want_null:
-                    continue
-                return False
-            if t_fields:
-                # null-preserving transforms: dir nullness ⇔ source
-                # nullness for every row of the file
-                if (part[t_fields[0].dirname] is None) == want_null:
-                    continue
-                return False
-            n = (stats.get(col) or {}).get("nulls")
-            if n is not None and ((want_null and n >= rows) or (not want_null and n == 0)):
-                continue
-            return False
-        if op == "in":
-            vals = [x for x in v if x is not None]
-            if not vals:
-                return False
-            if col in part:
-                kind = part_types.get(col)
-                if part[col] is None or kind is None:
-                    return False
-                cpv = _canon_partition(part[col], kind)
-                if cpv is _PART_UNKNOWN or cpv is None:
-                    return False
-                cvs = [_canon_partition(x, kind) for x in vals]
-                if any(c is _PART_UNKNOWN for c in cvs):
-                    return False
-                if any(c is not None and cpv == c for c in cvs):
-                    continue
-                return False
-            st = stats.get(col) or {}
-            if st.get("nulls") != 0:
-                return False
-            fmin, fmax = st.get("min"), st.get("max")
-            if fmin is None or not _enc_exact_eq(fmin, fmax):
-                return False
-            encs = [_stat_probe_encode(x, part_types.get(col), utc) for x in vals]
-            if any(e is not None and _enc_exact_eq(e, fmin) for e in encs):
-                continue
-            return False
-        # inequality / range constraint
-        if v is None:
-            return False
-        if col in part:
-            kind = part_types.get(col)
-            if part[col] is None:
-                return False
-            if kind == "string" and isinstance(v, str):
-                cpv, cx = part[col], v
-            else:
-                if kind is None:
-                    return False
-                cpv = _canon_partition(part[col], "double" if kind == "string" else kind)
-                cx = _canon_partition(v, kind)
-                if (
-                    cpv is _PART_UNKNOWN
-                    or cx is _PART_UNKNOWN
-                    or cpv is None
-                    or cx is None
-                ):
-                    return False
-            if (
-                (op == ">=" and cpv >= cx)
-                or (op == ">" and cpv > cx)
-                or (op == "<=" and cpv <= cx)
-                or (op == "<" and cpv < cx)
-            ):
-                continue
-            return False
-        st = stats.get(col) or {}
-        if st.get("nulls") != 0:
-            return False
-        fmin, fmax = st.get("min"), st.get("max")
-        if fmin is None:
-            return False
-        e = _stat_probe_encode(v, part_types.get(col), utc)
-        if e is None or not _comparable(e, fmin):
-            return False
-        if isinstance(e, dict):
-            e, fmin, fmax = _enc_order(e), _enc_order(fmin), _enc_order(fmax)
-        elif isinstance(e, (int, float)) and type(e) is not type(fmin):
-            if abs(e) >= 2**53 or abs(fmin) >= 2**53 or abs(fmax) >= 2**53:
-                return False
-        if (
-            (op == ">=" and fmin >= e)
-            or (op == ">" and fmin > e)
-            or (op == "<=" and fmax <= e)
-            or (op == "<" and fmax < e)
-        ):
-            continue
-        return False
-    return True
+        c = _constraint_verdict(entry, col, op, v, ctx)
+        if c == _NONE:
+            return _NONE
+        out = min(out, c)
+    return out
 
 
 # -- distributed read planning ("metadata as data") -------------------
@@ -2188,39 +1899,6 @@ class ManifestTable:
                 cached = {}  # missing sidecar = no blooms = never prunes
             self._bloom_cache[ref] = cached
         return cached.get(entry["path"], {})
-
-    def _entry_may_contain(
-        self,
-        entry: dict,
-        values_by_col: dict[str, list],
-        types: dict[str, str] | None = None,
-        utc: bool = True,
-    ) -> bool:
-        """False only when the entry PROVABLY holds none of the probe
-        values: some column's recorded min/max excludes every value, or
-        some column's bloom tests negative for every value. Missing
-        stats/blooms (or oversized probe sets) never prune — unknown
-        means "possibly contains", the same soundness contract as
-        ``_stats_disjoint``. ``types`` (column → simpleString) lets the
-        stats tests refuse unit-mismatched temporal probes — without it
-        every temporal probe is treated as un-encodable (sound, just
-        prunes less). The stats half is the pure module-level
-        ``_entry_stats_may_contain`` (what distributed planning ships
-        to executors); the bloom sidecar probe stays here, deferred
-        past the stats tests."""
-        if not _entry_stats_may_contain(entry, values_by_col, types, utc):
-            return False
-        blooms: dict | None = None  # sidecar load deferred past stats
-        for col, values in values_by_col.items():
-            vals = [v for v in values if v is not None]
-            if not vals or len(vals) > _BLOOM_PROBE_MAX:
-                continue
-            if blooms is None:
-                blooms = self._entry_blooms(entry)
-            bloom = blooms.get(col)
-            if bloom and _bloom_excludes(bloom, vals):
-                return False
-        return True
 
     # -- version bookkeeping ------------------------------------------
 
@@ -2428,56 +2106,46 @@ class ManifestTable:
         nullness tests ``('col', 'is_null')`` / ``('col', 'not_null')``
         (footer null counts, NULL partition dirs, and null-preserving
         transform dirs all prune them), ANDed together. A file
-        is pruned only when some constraint PROVABLY excludes every row
-        it holds: its hive partition value (a file constant) fails the
-        constraint, its recorded min/max range misses it, or its bloom
-        filter tests negative for every probed value. Missing stats,
-        un-encodable probes, and lossy cross-type comparisons never
-        prune — identical soundness contract to the MERGE/DELETE
-        planners, which share these primitives.
+        is pruned only when its metadata PROVES no row matches:
+        ``_verdict`` says NONE (a hive partition value, a spec-history
+        transform dir or the recorded min/max range excludes some
+        constraint), or its bloom filter tests negative for every
+        probed value. Missing stats, un-encodable probes, and lossy
+        cross-type comparisons never prune — the one evaluator every
+        planner (reads, row verbs, MERGE, ``delete_keys``) shares.
 
         ``utc`` gates BOTH timezone-sensitive prune families: the
         transform-dir reasoning (the Python mirror of days()/hours()
         derivation assumes UTC sessions) AND timestamp-kind stat
         probes (footer stats are wall-as-UTC micros; a non-UTC session
         interprets the probe literal in its own zone)."""
-        cmap = column_map or {}
-        # translate LOGICAL spec/type names to the PHYSICAL namespace
-        # everything below (stats keys, partition dirs, blooms) lives in
-        norm = [
-            (cmap.get(col, col), op, v)
-            for col, op, v in _normalize_predicates(predicates)
-        ]
-        part_types = {
-            cmap.get(f.name, f.name): f.dataType.simpleString()
-            for f in (schema.fields if schema else [])
-        }
-        tmap = _prune_tmap(partition_by, partition_specs, utc)
+        ctx = _prune_ctx(
+            {
+                "partition_by": partition_by,
+                "partition_specs": partition_specs,
+                "column_map": column_map,
+            },
+            utc,
+            schema,
+        )
+        spec = ctx.spec(predicates)
         kept, pruned = [], []
         for e in entries:
-            if _fully_dead(e) or not self._entry_matches_possible(
-                e, norm, part_types, tmap, utc=utc
-            ):
+            if _fully_dead(e) or not self._entry_matches_possible(e, spec, ctx):
                 pruned.append(e)
             else:
                 kept.append(e)
         return kept, pruned
 
     def _entry_matches_possible(
-        self,
-        entry: dict,
-        constraints: list[tuple],
-        part_types: dict[str, str],
-        tmap: dict[str, "_PartitionField"] | None = None,
-        utc: bool = True,
+        self, entry: dict, constraints: list[tuple], ctx: _PruneCtx
     ) -> bool:
-        """False only when some conjunctive constraint PROVABLY holds
-        for no row of the file. The partition-constant, transform-dir,
-        and footer-stats tests are the pure ``_entry_matches_stats``
-        (shared verbatim with the distributed planner); the bloom
-        sidecar probe layers on top for small ``in`` sets over
-        non-partition columns."""
-        if not _entry_matches_stats(entry, constraints, part_types, tmap, utc):
+        """False only when the entry PROVABLY holds no row matching the
+        normalized ``constraints``: ``_verdict`` says NONE, or — the one
+        bloom pass of every planner, a driver-side layer over the
+        verdict's survivors — a small ``in`` set over a non-partition
+        column tests negative in the file's bloom sidecar."""
+        if _verdict(entry, constraints, ctx) == _NONE:
             return False
         part = entry.get("partition") or {}
         for col, op, v in constraints:
@@ -2545,8 +2213,8 @@ class ManifestTable:
         # under the engine's pinned UTC sessions — other zones keep
         # date/int/string stats, bloom, and raw-partition pruning and
         # simply skip the timezone-sensitive reasoning
-        utc = _session_utc(spark)
-        kept = self._plan_read_entries(spark, version, raw, specs, schema, utc)
+        ctx = _prune_ctx(raw, _session_utc(spark), schema)
+        kept = self._plan_read_entries(spark, version, raw, specs, ctx)
         if not kept:
             return spark.createDataFrame([], schema or raw["schema"])
         df = self._read_files(spark, kept, man=raw)
@@ -2565,7 +2233,7 @@ class ManifestTable:
         interior of the match counted from METADATA: after the same
         file pruning ``snapshot_where`` plans, every kept file whose
         footer stats / partition constants PROVE all rows match
-        (``_entry_all_match`` — ranges require a recorded zero null
+        (``_verdict`` is ALL — ranges require a recorded zero null
         count) contributes its live row count without being opened;
         only the boundary files — the ones that may contain both
         matching and non-matching rows — are scanned, in one job, with
@@ -2593,25 +2261,16 @@ class ManifestTable:
         pred = cols[0]
         for c in cols[1:]:
             pred = pred | c
-        utc = _session_utc(spark)
-        kept = self._plan_read_entries(spark, version, raw, specs, schema, utc)
-        cmap = raw.get("column_map") or {}
-        part_types = {
-            cmap.get(f.name, f.name): f.dataType.simpleString()
-            for f in (schema.fields if schema else [])
-        }
-        tmap = _prune_tmap(raw.get("partition_by"), raw.get("partition_specs"), utc)
-        norm = [
-            [(cmap.get(col, col), op, v) for col, op, v in _normalize_predicates(s)]
-            for s in specs
-        ]
+        ctx = _prune_ctx(raw, _session_utc(spark), schema)
+        kept = self._plan_read_entries(spark, version, raw, specs, ctx)
+        norm = [ctx.spec(s) for s in specs]
         full_rows = 0
         full_files = 0
         partial: list[dict] = []
         for e in kept:
             # a file all-matches the DNF when ONE disjunct provably
             # holds for every row (then every row satisfies the OR)
-            if any(_entry_all_match(e, sp, part_types, tmap, utc) for sp in norm):
+            if any(_verdict(e, sp, ctx) == _ALL for sp in norm):
                 full_rows += (e.get("rows") or 0) - _dv_count(e)
                 full_files += 1
             else:
@@ -2620,7 +2279,7 @@ class ManifestTable:
         if partial:
             df = self._read_files(spark, partial, man=raw)
             if schema is not None:
-                df = _align(df, schema, cmap)
+                df = _align(df, schema, ctx.cmap)
             total += df.filter(pred).count()
         self.last_count_plan = {
             "version": version,
@@ -2637,18 +2296,18 @@ class ManifestTable:
         version: int,
         raw: dict,
         specs: list[list[tuple]],
-        schema: StructType | None,
-        utc: bool,
+        ctx: _PruneCtx,
     ) -> list[dict]:
-        """The file entries a DNF spec might touch, planned at the
-        right tier for the snapshot's size:
+        """The file entries a DNF spec might touch (``_verdict`` is not
+        NONE for some disjunct), planned at the right tier for the
+        snapshot's size:
 
         - **driver** (< ``_SPARK_PRUNE_MIN_FILES``): the in-memory
           per-entry loop — a Spark job's scheduling latency would
           dominate at this size;
         - **distributed**: entries already driver-resident (inline
           manifest or resolved cache) ship once via Arrow and the
-          stats matcher runs as a mapInPandas job;
+          verdict runs as a mapInPandas job;
         - **distributed-lazy**: the version resolves from a parquet
           checkpoint sidecar — planning SCANS the sidecar (the file
           entries are already a columnar metadata table; the driver
@@ -2658,26 +2317,16 @@ class ManifestTable:
           replacement entries themselves.
 
         All tiers end with the same driver-side per-disjunct pass over
-        the O(matching) stats survivors, which layers bloom-sidecar
+        the O(matching) verdict survivors, which layers bloom-sidecar
         probes on top — so every tier returns the identical kept set,
         and ``last_planning`` records which tier ran."""
-        partition_by = raw.get("partition_by")
-        cmap = raw.get("column_map") or {}
-        part_types = {
-            cmap.get(f.name, f.name): f.dataType.simpleString()
-            for f in (schema.fields if schema else [])
-        }
-        tmap = _prune_tmap(partition_by, raw.get("partition_specs"), utc)
         # specs arrive in LOGICAL names; stats/partition/bloom keys are
-        # PHYSICAL — translate once here
-        norm = [
-            [(cmap.get(col, col), op, v) for col, op, v in _normalize_predicates(s)]
-            for s in specs
-        ]
+        # PHYSICAL — translated once here
+        norm = [ctx.spec(s) for s in specs]
 
         def stats_match(e: dict) -> bool:
             return not _fully_dead(e) and any(
-                _entry_matches_stats(e, sp, part_types, tmap, utc) for sp in norm
+                _verdict(e, sp, ctx) != _NONE for sp in norm
             )
 
         mode = "driver"
@@ -2725,18 +2374,16 @@ class ManifestTable:
             if candidates >= _SPARK_PRUNE_MIN_FILES:
                 mode = "distributed"
                 entries = _spark_filter_entries(_entries_df(spark, entries), stats_match)
-        # bloom layer: per-disjunct driver pass over the stats
-        # survivors (identical semantics at every tier — the stats
-        # tests are deterministic per entry, so re-running them over
-        # survivors is a no-op plus the bloom probes)
-        keep_paths: set[str] = set()
-        for s in specs:
-            kept_s, _ = self._prune_by_key_stats(
-                entries, s, schema, partition_by=partition_by, utc=utc,
-                column_map=cmap, partition_specs=raw.get("partition_specs"),
-            )
-            keep_paths.update(e["path"] for e in kept_s)
-        kept = [e for e in entries if e["path"] in keep_paths]
+        # bloom layer: per-disjunct driver pass over the verdict
+        # survivors (identical semantics at every tier — the verdict is
+        # deterministic per entry, so re-running it over survivors is
+        # a no-op plus the bloom probes)
+        kept = [
+            e
+            for e in entries
+            if not _fully_dead(e)
+            and any(self._entry_matches_possible(e, sp, ctx) for sp in norm)
+        ]
         self.last_planning = {
             "mode": mode,
             "version": version,
@@ -2809,46 +2456,26 @@ class ManifestTable:
         }
         return kept, cold
 
-    def _split_by_values(
+    def _prune_split(
         self,
         spark: SparkSession,
         entries: list[dict],
-        values_by_col: dict[str, list],
-        types: dict[str, str],
-        utc: bool,
+        spec: list[tuple],
+        ctx: _PruneCtx,
         op: str,
-        column_map: dict[str, str] | None = None,
     ) -> tuple[list[dict], list[dict]]:
-        """(may-contain, provably-cold) under a values probe — the
-        MERGE/DELETE point-prune. The stats half (pure) distributes
-        past the threshold; bloom sidecar probes stay a driver pass
-        over the O(matching) stats survivors. ``values_by_col`` and
-        ``types`` arrive in LOGICAL names; stats and bloom keys are
-        PHYSICAL — translated here."""
-        if column_map:
-            values_by_col = {
-                column_map.get(c, c): v for c, v in values_by_col.items()
-            }
-            types = {column_map.get(c, c): t for c, t in types.items()}
-        # zone-bind datetime probes on the DRIVER (see _bind_naive):
-        # the stats half of this split may run in executor processes
-        # whose TZ differs
-        values_by_col = {
-            c: [_bind_naive(x) for x in vals] for c, vals in values_by_col.items()
-        }
+        """(kept, cold) under the normalized ``spec``: the ``_verdict``
+        split at the tier ``_split_candidates`` picks (it records
+        ``last_planning``), then the one bloom pass
+        (``_entry_matches_possible``) as a driver loop over the
+        O(matching) survivors; cold lists verdict-cold files first."""
         kept, cold = self._split_candidates(
-            spark,
-            entries,
-            lambda e: _entry_stats_may_contain(e, values_by_col, types, utc),
-            op,
+            spark, entries, lambda e: _verdict(e, spec, ctx) != _NONE, op
         )
-        still: list[dict] = []
+        hot = []
         for e in kept:
-            if self._entry_may_contain(e, values_by_col, types=types, utc=utc):
-                still.append(e)
-            else:
-                cold.append(e)
-        return still, cold
+            (hot if self._entry_matches_possible(e, spec, ctx) else cold).append(e)
+        return hot, cold
 
     def _rewrite_candidates(
         self,
@@ -2863,47 +2490,40 @@ class ManifestTable:
 
         Fully-dead files (every row DV-deleted) hold no row to match
         and are dropped from all three lists, so a rewrite commit
-        leaves them out. A spec ``where`` prunes provably-cold files
-        from partition values, key-range stats and blooms
-        (``_prune_by_key_stats``), then proves from the same metadata
-        which candidates match on EVERY row (``_entry_all_match``:
-        partition constants, spec-history dirs, stats ranges with a
-        recorded zero null count; a file with a DV never proves, its
-        live rows are not what the footer describes). A values probe
-        (``delete_keys``) prunes by per-file stats and blooms
-        (``_split_by_values``). Any other ``where`` can't be reasoned
-        about from metadata: every live file is a candidate. ``op``
-        tags ``last_planning``."""
+        leaves them out. A spec ``where`` (``delete_keys``' value set
+        is the spec ``[(key, "in", values)]``) is judged by
+        ``_verdict``: files it proves cold from partition values,
+        spec-history dirs and key-range stats — or that a bloom
+        excludes (``_entry_matches_possible``) — are untouched, and
+        files it proves ALL match on every row (a file with a DV never
+        proves: its live rows are not what the footer describes). Any
+        other ``where`` can't be reasoned about from metadata: every
+        live file is a candidate. ``op`` tags ``last_planning``, whose
+        ``mode`` is the verdict split's tier and whose ``candidates`` /
+        ``kept`` count the files left after pruning / proved."""
         live = [e for e in man["files"] if not _fully_dead(e)]
-        cmap = man.get("column_map") or {}
-        utc = _session_utc(spark)
-        if where.spec is not None:
-            candidates, untouched = self._prune_by_key_stats(
-                live, where.spec, schema,
-                partition_by=man["partition_by"], utc=utc,
-                column_map=cmap, partition_specs=man.get("partition_specs"),
-            )
-            tmap = _prune_tmap(man["partition_by"], man.get("partition_specs"), utc)
-            part_types = {
-                cmap.get(f.name, f.name): f.dataType.simpleString()
-                for f in (schema.fields if schema else [])
-            }
-            phys_spec = [(cmap.get(c, c), o, v) for c, o, v in where.spec]
-            proved, candidates = self._split_candidates(
-                spark,
-                candidates,
-                lambda e: not (e.get("dv") or e.get("dv_ref"))
-                and _entry_all_match(e, phys_spec, part_types, tmap, utc),
-                op,
-            )
-            return proved, candidates, untouched
-        if where.values:
-            candidates, untouched = self._split_by_values(
-                spark, live, where.values, self._schema_types(man), utc, op,
-                column_map=cmap,
-            )
-            return [], candidates, untouched
-        return [], live, []
+        if where.spec is None:
+            return [], live, []
+        ctx = _prune_ctx(man, _session_utc(spark), schema)
+        spec = ctx.spec(where.spec)
+        kept, _ = self._prune_split(spark, live, spec, ctx, op)
+        mode = self.last_planning["mode"]
+        hot = {e["path"] for e in kept}
+        proved, candidates, untouched = [], [], []
+        for e in live:
+            if e["path"] not in hot:
+                untouched.append(e)
+            elif not (e.get("dv") or e.get("dv_ref")) and _verdict(e, spec, ctx) == _ALL:
+                proved.append(e)
+            else:
+                candidates.append(e)
+        self.last_planning = {
+            "mode": mode,
+            "op": op,
+            "candidates": len(proved) + len(candidates),
+            "kept": len(proved),
+        }
+        return proved, candidates, untouched
 
     def _rewrite_targets(
         self,
@@ -2946,16 +2566,6 @@ class ManifestTable:
                 )
                 (hit if full in hit_files else untouched).append(entry)
         return proved, hit, untouched
-
-    @staticmethod
-    def _schema_types(man: dict) -> dict[str, str]:
-        """Column → simpleString type map from a manifest's committed
-        schema ({} for pre-evolution manifests) — what the stats
-        probes need to refuse unit-mismatched temporal comparisons."""
-        schema = ManifestTable._manifest_schema(man)
-        if schema is None:
-            return {}
-        return {f.name: f.dataType.simpleString() for f in schema.fields}
 
     @staticmethod
     def _manifest_schema(man: dict) -> StructType | None:
@@ -5155,16 +4765,19 @@ class ManifestTable:
            candidate and falls through to the per-file tiers; a
            rewrite migrates it to the current layout as a side effect.
         2. KEY-RANGE: the source's per-key min/max (one scalar
-           aggregate) becomes a BETWEEN spec judged by the same
-           per-entry matcher every read plans with — footer stats AND
-           raw partition constants AND spec-history transform dirs.
-           Files with no usable facts are never pruned (unknown =
-           possibly touched).
+           aggregate) becomes a BETWEEN spec judged by ``_verdict``,
+           the evaluator every read plans with — footer stats AND raw
+           partition constants AND spec-history transform dirs. A file
+           is kept unless the verdict is NONE; files with no usable
+           facts are never pruned (unknown = possibly touched).
         3. BLOOM: when the source's distinct values on an indexed key
-           fit the probe budget (the GDPR/correction shape), files
-           whose bloom excludes every value are carried by reference —
-           the prune that works where ranges can't (hash-scattered
-           keys make every file's min/max span the domain).
+           fit the probe budget (the GDPR/correction shape), they
+           become an ``in`` spec, judged like ``delete_keys``' one:
+           ``_verdict``, then the bloom pass of
+           ``_entry_matches_possible``. Files whose bloom excludes
+           every value are carried by reference — the prune that works
+           where ranges can't (hash-scattered keys make every file's
+           min/max span the domain).
 
         WHEN NOT MATCHED BY SOURCE (``nmbs_active``) makes every file
         a rewrite candidate (any file may hold an unmatched row):
@@ -5201,28 +4814,13 @@ class ManifestTable:
             )
             tiers.append(dict(self.last_planning or {}))
 
-        phys_keys = [cmap.get(k, k) for k in keys]
-        if touched and phys_keys and not nmbs_active:
-            bounds = _source_key_bounds(src_phys, phys_keys)
+        ctx = _prune_ctx(man, _session_utc(spark), schema)
+        if touched and keys and not nmbs_active:
+            bounds = _source_key_bounds(source, keys)
             if bounds:
-                spec = _normalize_predicates(
-                    [(k, "between", b) for k, b in bounds.items()]
-                )
-                part_types = {
-                    cmap.get(f.name, f.name): f.dataType.simpleString()
-                    for f in schema.fields
-                }
-                utc = _session_utc(spark)
-                tmap = _prune_tmap(
-                    partition_by, man.get("partition_specs"), utc
-                )
-                touched, cold = self._split_candidates(
-                    spark,
-                    touched,
-                    lambda e: _entry_matches_stats(
-                        e, spec, part_types, tmap, utc
-                    ),
-                    "merge-range",
+                spec = ctx.spec([(k, "between", b) for k, b in bounds.items()])
+                touched, cold = self._prune_split(
+                    spark, touched, spec, ctx, "merge-range"
                 )
                 tiers.append(dict(self.last_planning or {}))
                 untouched.extend(cold)
@@ -5231,7 +4829,7 @@ class ManifestTable:
             k for k in keys if cmap.get(k, k) in (man.get("bloom_cols") or [])
         ]
         if touched and bloom_keys and not nmbs_active:
-            probe: dict[str, list] = {}
+            probe = []
             for k in bloom_keys:
                 vals = [
                     r[0]
@@ -5240,16 +4838,12 @@ class ManifestTable:
                     .limit(_BLOOM_PROBE_MAX + 1)
                     .collect()
                 ]
-                if len(vals) <= _BLOOM_PROBE_MAX:
-                    probe[k] = vals
+                # an all-NULL key probes nothing (NULL joins no row)
+                if len(vals) <= _BLOOM_PROBE_MAX and any(v is not None for v in vals):
+                    probe.append((k, "in", vals))
             if probe:
-                types = {
-                    f.name: f.dataType.simpleString() for f in schema.fields
-                }
-                utc = _session_utc(spark)
-                touched, cold = self._split_by_values(
-                    spark, touched, probe, types, utc, "merge-bloom",
-                    column_map=man.get("column_map"),
+                touched, cold = self._prune_split(
+                    spark, touched, ctx.spec(probe), ctx, "merge-bloom"
                 )
                 tiers.append(dict(self.last_planning or {}))
                 untouched.extend(cold)
@@ -5747,18 +5341,19 @@ class ManifestTable:
         min/max first, then per-file bloom filters when the table
         was written with ``bloom_cols`` — which is what saves the day
         on hash-scattered keys, where every file's range overlaps
-        everything. NULLs in ``values`` are ignored (SQL IN never
-        matches NULL)."""
+        everything. The value set reaches the planner as the spec
+        ``[(key_col, "in", values)]``, judged by ``_verdict`` like any
+        other spec (partition constants, stats, and the all-match
+        proof that drops a file whole) before the bloom pass. NULLs in
+        ``values`` are ignored (SQL IN never matches NULL)."""
         vals = [v for v in dict.fromkeys(values) if v is not None]
         if not vals:
             return self.require_version()
         return self.delete_where(
             spark,
-            F.col(key_col).isin(vals),
+            _SpecText([(key_col, "in", vals)], f"{key_col} IN (<{len(vals)} values>)"),
             mode=mode,
             mor_row_limit=mor_row_limit,
-            _prune_values={key_col: vals},
-            _describe=f"{key_col} IN (<{len(vals)} values>)",
         )
 
     def delete_where(
@@ -5767,8 +5362,6 @@ class ManifestTable:
         predicate: str | Column | Sequence[tuple],
         mode: str = "copy_on_write",
         mor_row_limit: int = _MOR_FALLBACK_ROWS,
-        _prune_values: dict[str, list] | None = None,
-        _describe: str | None = None,
     ) -> int:
         """DELETE the rows matching ``predicate``; returns the new
         version (or the current one when nothing matched: an empty
@@ -5817,7 +5410,7 @@ class ManifestTable:
         later rewrite of a file's rows (MERGE touch, compact)
         materializes its DV away.
         """
-        where = _where_form(predicate, _prune_values, _describe)
+        where = _where_form(predicate)
         if mode == "merge_on_read":
             try:
                 return self._delete_where_mor(spark, where, mor_row_limit)
@@ -6269,26 +5862,9 @@ class ManifestTable:
             man = self._read_manifest(base)
             in_scope = None
             if spec is not None:
-                cmap = man.get("column_map") or {}
-                phys_spec = [
-                    (cmap.get(col, col), op, v) for col, op, v in spec
-                ]
-                schema0 = self._manifest_schema(man)
-                part_types = (
-                    {
-                        cmap.get(f.name, f.name): f.dataType.simpleString()
-                        for f in schema0.fields
-                    }
-                    if schema0 is not None
-                    else {}
-                )
-                utc = _session_utc(spark)
-                tmap = _prune_tmap(
-                    man["partition_by"], man.get("partition_specs"), utc
-                )
-                in_scope = lambda e: _entry_matches_stats(  # noqa: E731
-                    e, phys_spec, part_types, tmap, utc
-                )
+                ctx = _prune_ctx(man, _session_utc(spark))
+                phys_spec = ctx.spec(spec)
+                in_scope = lambda e: _verdict(e, phys_spec, ctx) != _NONE  # noqa: E731
             carried, rewrite = [], []
             for e in man["files"]:
                 if in_scope is not None and not in_scope(e):

@@ -138,6 +138,7 @@ SLOW_TIER = frozenset(
         "test_semantic_dedup.py::test_identical_vectors_keep_min_id",
         "test_sinks.py::test_append_then_overwrite_roundtrip",
         "test_sinks.py::test_overwrite_partitions_touches_only_batch_partitions",
+        "test_skipping_property.py::test_twin_routes_count_like_a_scan",
         "test_skew.py::test_exact_group_percentiles_matches_builtin",
         "test_sources.py::test_fetch_and_decode",
         "test_sql.py::test_dml_route_matches_library_route",

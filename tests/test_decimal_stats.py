@@ -13,10 +13,12 @@ from pyspark.sql import functions as F
 
 from etl_job_spark.table import (
     ManifestTable,
+    _NONE,
+    _PruneCtx,
     _comparable,
-    _range_excludes,
     _stat_encode,
     _stat_probe_encode,
+    _verdict,
 )
 
 
@@ -80,13 +82,19 @@ def test_decimal_cross_scale_probe_sound(spark, tmp_path):
 
 def test_float_and_string_probes_never_prune_decimal():
     st = {"min": {"dec": "10.00"}, "max": {"dec": "20.00"}}
-    assert not _range_excludes(st, ">", 25.0, "decimal(18,2)")  # float: lossy
-    assert not _range_excludes(st, ">", "25", "decimal(18,2)")  # string: lossy
-    assert _range_excludes(st, ">", Decimal("20.00"), "decimal(18,2)")
-    assert _range_excludes(st, ">", 21, "decimal(18,2)")
-    assert _range_excludes(st, ">", 20, "decimal(18,2)")  # max == 20.00, none > 20
-    assert not _range_excludes(st, ">=", 20, "decimal(18,2)")  # 20.00 >= 20 matches
-    assert not _range_excludes(st, ">=", Decimal("19.995"), "decimal(18,2)")
+    entry = {"rows": 3, "stats": {"amt": st}}
+    ctx = _PruneCtx({"amt": "decimal(18,2)"}, {}, True, {})
+
+    def excludes(op, v):
+        return _verdict(entry, ctx.spec([("amt", op, v)]), ctx) == _NONE
+
+    assert not excludes(">", 25.0)  # float: lossy
+    assert not excludes(">", "25")  # string: lossy
+    assert excludes(">", Decimal("20.00"))
+    assert excludes(">", 21)
+    assert excludes(">", 20)  # max == 20.00, none > 20
+    assert not excludes(">=", 20)  # 20.00 >= 20 matches
+    assert not excludes(">=", Decimal("19.995"))
 
 
 def test_decimal_encoding_family_isolated():

@@ -26,6 +26,17 @@ def _df(spark, rows):
     return spark.createDataFrame(rows, "k string, dy string, v double")
 
 
+def _may_contain(t, entry, values_by_col):
+    """Whether the planner keeps ``entry`` under a values probe: the
+    ``in`` spec ``delete_keys`` and MERGE's bloom tier hand to the
+    verdict plus the bloom pass, typed by the table's latest manifest."""
+    from etl_job_spark.table import _prune_ctx
+
+    ctx = _prune_ctx(t._read_manifest(t.latest_version()), utc=True)
+    spec = ctx.spec([(c, "in", vals) for c, vals in values_by_col.items()])
+    return t._entry_matches_possible(entry, spec, ctx)
+
+
 def _data(df):
     return sorted((r.k, r.dy, float(r.v)) for r in df.select("k", "dy", "v").collect())
 
@@ -582,9 +593,11 @@ def test_zorder_compact_skips_on_every_dimension(spark, tmp_path):
     assert len(entries) == 16
 
     def _touched(table_entries, ranges):
-        from etl_job_spark.table import _stats_disjoint
+        from etl_job_spark.table import _NONE, _prune_ctx, _verdict
 
-        return [e for e in table_entries if not _stats_disjoint(e, ranges)]
+        ctx = _prune_ctx({}, utc=True)
+        spec = ctx.spec([(c, "between", r) for c, r in ranges.items()])
+        return [e for e in table_entries if _verdict(e, spec, ctx) != _NONE]
 
     # narrow windows on EACH dimension prune most z-ordered files...
     x_touched = _touched(entries, {"x": (10, 13)})
@@ -1232,7 +1245,7 @@ def test_bloom_false_negative_impossible_for_present_values(spark, tmp_path):
         import pyarrow.parquet as pq
 
         ks = [v for v in pq.read_table(full, columns=["k"]).column("k").to_pylist()]
-        assert t._entry_may_contain(e, {"k": ks[:50]})
+        assert _may_contain(t, e, {"k": ks[:50]})
 
 
 # -- streaming-transaction idempotency ---------------------------------
@@ -1411,7 +1424,7 @@ def test_bloom_probe_uses_persisted_k(spark, tmp_path):
         ks = [v for v in pq.read_table(full, columns=["k"]).column("k").to_pylist()]
         # every present key must still test possibly-present under the
         # sidecar's own (smaller) k
-        assert t._entry_may_contain(e, {"k": ks})
+        assert _may_contain(t, e, {"k": ks})
 
 
 # -- round-6 soundness: lossy-cast probes, oversized sets, constraints --
@@ -1432,7 +1445,7 @@ def test_large_float_probe_never_prunes_bloom_or_stats(spark, tmp_path):
     # Spark's own semantics: the row MATCHES the float probe
     assert t.snapshot(spark).filter(F.col("k").isin([probe])).count() == 1
     e = t._read_manifest(t.latest_version())["files"][0]
-    assert t._entry_may_contain(e, {"k": [probe]})
+    assert _may_contain(t, e, {"k": [probe]})
     v = t.delete_keys(spark, "k", [probe])
     assert v == 2 and t.snapshot(spark).count() == 0
 
@@ -1449,8 +1462,8 @@ def test_large_int_probes_still_prune_exactly(spark, tmp_path):
         bloom_cols=["k"],
     )
     e = next(x for x in t._read_manifest(t.latest_version())["files"] if x["rows"])
-    assert not t._entry_may_contain(e, {"k": [base - 5, base + 100]})
-    assert t._entry_may_contain(e, {"k": [base + 2]})
+    assert not _may_contain(t, e, {"k": [base - 5, base + 100]})
+    assert _may_contain(t, e, {"k": [base + 2]})
 
 
 def test_oversized_keyset_envelope_prunes(spark, tmp_path):
@@ -1463,9 +1476,9 @@ def test_oversized_keyset_envelope_prunes(spark, tmp_path):
     low = next(e for e in man["files"] if e["stats"]["k"]["min"] == 0)
     n_over = _BLOOM_PROBE_MAX + 10
     # a >_BLOOM_PROBE_MAX set wholly above the file's range: pruned
-    assert not t._entry_may_contain(low, {"k": list(range(10_000, 10_000 + n_over))})
+    assert not _may_contain(t, low, {"k": list(range(10_000, 10_000 + n_over))})
     # a straddling envelope (members could be inside): kept
-    assert t._entry_may_contain(low, {"k": list(range(-50, -50 + n_over))})
+    assert _may_contain(t, low, {"k": list(range(-50, -50 + n_over))})
     # end-to-end: an oversized delete hitting only the high file
     # carries the low file by reference (same path survives)
     v = t.delete_keys(spark, "k", list(range(100, 100 + n_over)))
@@ -1790,12 +1803,11 @@ def test_temporal_unit_mismatch_probes_never_prune(spark, tmp_path):
         ).coalesce(1)
     )
     ed = next(e for e in td._read_manifest(td.latest_version())["files"] if e["rows"])
-    types = {"d": "date"}
     # datetime probe of a date column: unknown, keep the file
     assert td.snapshot_where(spark, [("d", ">=", dt.datetime(2024, 6, 1))]).count() == 1
     # matching-unit probes still prune
-    assert not td._entry_may_contain(ed, {"d": [dt.date(2030, 1, 1)]}, types=types)
-    assert td._entry_may_contain(ed, {"d": [dt.date(2024, 6, 15)]}, types=types)
+    assert not _may_contain(td, ed, {"d": [dt.date(2030, 1, 1)]})
+    assert _may_contain(td, ed, {"d": [dt.date(2024, 6, 15)]})
 
     tt = ManifestTable(str(tmp_path / "tu_ts"))
     tt.overwrite(
@@ -1809,22 +1821,28 @@ def test_temporal_unit_mismatch_probes_never_prune(spark, tmp_path):
     exp = tt.snapshot(spark).filter(F.col("ts") >= F.lit(dt.date(2024, 6, 15)))
     assert got.count() == exp.count() == 1
     et = next(e for e in tt._read_manifest(tt.latest_version())["files"] if e["rows"])
-    assert not tt._entry_may_contain(
-        et, {"ts": [dt.datetime(2030, 1, 1)]}, types={"ts": "timestamp"}
-    )
+    assert not _may_contain(tt, et, {"ts": [dt.datetime(2030, 1, 1)]})
 
 
 def test_envelope_rejects_cross_type_member_past_2_53(spark):
-    from etl_job_spark.table import _envelope_outside
+    from etl_job_spark.table import _BLOOM_PROBE_MAX, _NONE, _PruneCtx, _verdict
 
     s = 2**55 + 12  # float(s) == float(s + 4): the lossy-cast corner
-    st = {"min": 0, "max": s}
+    entry = {"rows": 2, "stats": {"k": {"min": 0, "max": s}}}
+    ctx = _PruneCtx({"k": "bigint"}, {}, True, {})
+
+    def outside(vals):
+        # padded past _BLOOM_PROBE_MAX with members above the range, so
+        # the set is judged by its envelope, as oversized sets are
+        pad = [s + 6 + i for i in range(_BLOOM_PROBE_MAX)]
+        return _verdict(entry, ctx.spec([("k", "in", vals + pad)]), ctx) == _NONE
+
     # oversized-set shape: int endpoints prune, but the float member
     # double-cast-equals the stored max — the file must stay
     vals = [s + 1, s + 5, float(s + 4)]
-    assert not _envelope_outside(st, vals, "bigint")
+    assert not outside(vals)
     # all-int sets of the same magnitude still prune exactly
-    assert _envelope_outside(st, [s + 1, s + 5], "bigint")
+    assert outside([s + 1, s + 5])
 
 
 def test_bucket_transform_cross_type_probe_not_pruned(spark, tmp_path):
