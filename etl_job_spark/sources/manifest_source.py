@@ -162,13 +162,7 @@ class _ManifestReader(DataSourceReader):
         total = len(entries)
         if self._specs:
             entries, _residual = t._prune_by_key_stats(
-                entries,
-                list(self._specs),
-                self._fields,
-                partition_by=man.get("partition_by"),
-                utc=self._utc,
-                column_map=man.get("column_map") or {},
-                partition_specs=man.get("partition_specs"),
+                entries, list(self._specs), self._fields, man=man, utc=self._utc
             )
         self.planned = {
             "candidates": total,
@@ -796,12 +790,12 @@ def write_task_files(
         otherwise land ~200 ten-thousand-row row groups, whose footer
         metadata and per-group page-index overhead every future scan
         of a 100 TB table pays. Memory is bounded by the buffer
-        budget per open writer."""
+        budget per open writer. ``stat_cols`` is the task's
+        ``stats_columns`` list, computed once per task: every file a
+        task writes has the same schema."""
 
-        def __init__(self, full: str, schema):
-            self._w = pq.ParquetWriter(
-                full, schema, write_statistics=stats_columns(schema)
-            )
+        def __init__(self, full: str, schema, stat_cols: list[str]):
+            self._w = pq.ParquetWriter(full, schema, write_statistics=stat_cols)
             self._buf: list = []
             self._bytes = 0
             self.float_stats: dict[str, dict] = {}
@@ -873,7 +867,9 @@ def write_task_files(
                 tbl = _physical(batch)
                 if writer is None:
                     os.makedirs(out_root, exist_ok=True)
-                    writer = _BufferedWriter(full, tbl.schema)
+                    writer = _BufferedWriter(
+                        full, tbl.schema, stats_columns(tbl.schema)
+                    )
                 writer.write_table(tbl)
         finally:
             if writer is not None:
@@ -898,6 +894,7 @@ def write_task_files(
     # as columns) — identical to Spark's partitionBy contract
     drop_cols = [f.dirname for f in fields if f.kind == "raw"]
     writers: dict[tuple, tuple] = {}  # key -> (writer, full, rel, pdict)
+    stat_cols = None
     try:
         for batch in iterator:
             if batch.num_rows == 0:
@@ -915,6 +912,8 @@ def write_task_files(
             tbl = phys_tbl
             if drop_cols:
                 tbl = tbl.drop_columns(drop_cols)
+            if stat_cols is None:
+                stat_cols = stats_columns(tbl.schema)
             keys = list(zip(*per_field))
             distinct = sorted(set(keys), key=lambda k: tuple(
                 "" if v is None else v for v in k
@@ -938,7 +937,10 @@ def write_task_files(
                     os.makedirs(os.path.dirname(full), exist_ok=True)
                     pdict = {f.dirname: v for f, v in zip(fields, key)}
                     state = (
-                        _BufferedWriter(full, part.schema), full, rel, pdict
+                        _BufferedWriter(full, part.schema, stat_cols),
+                        full,
+                        rel,
+                        pdict,
                     )
                     writers[key] = state
                 state[0].write_table(part)

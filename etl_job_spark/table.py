@@ -499,14 +499,26 @@ def _meta_acc_new(specs: dict) -> dict:
     }
 
 
+def _meta_order(x):
+    """``_enc_order`` under Spark's MIN/MAX ordering, where NaN sorts
+    above every other float. A file's recorded float min is NaN only
+    when every non-NULL value is NaN, and its max is NaN once any value
+    is (parquet-java's footers, ``fold_float_stats`` on the fused
+    route), so folding files under this order gives Spark's answer
+    whatever the file order."""
+    if isinstance(x, float) and x != x:
+        return (1, 0)
+    return (0, _enc_order(x))
+
+
 def _meta_merge(a: dict, lo, hi) -> None:
     try:
         if not a["seen"]:
             a["min"], a["max"], a["seen"] = lo, hi, True
             return
-        if _enc_order(lo) < _enc_order(a["min"]):
+        if _meta_order(lo) < _meta_order(a["min"]):
             a["min"] = lo
-        if _enc_order(hi) > _enc_order(a["max"]):
+        if _meta_order(hi) > _meta_order(a["max"]):
             a["max"] = hi
     except Exception:
         # incomparable encoding families (e.g. a column rewritten to a
@@ -1731,8 +1743,8 @@ def _verdict(entry: dict, constraints: list[tuple], ctx: _PruneCtx) -> int:
     conjunction of normalized ``constraints`` (``_PruneCtx.spec``),
     ``_ALL`` when it proves every row does, ``_SOME`` otherwise. Judged
     from the entry dict alone — bloom sidecars are the one fact it
-    leaves out (``ManifestTable._entry_matches_possible`` layers them
-    on) — so the function is pure and picklable: the distributed
+    leaves out (``ManifestTable._bloom_rejects`` layers them on) —
+    so the function is pure and picklable: the distributed
     planning tiers run it on the executors. A file with no rows never
     proves ALL; deletion vectors are the callers' concern (the footer
     describes the physical rows)."""
@@ -1780,27 +1792,47 @@ def _spark_filter_entries(
     match_fn: Callable[[dict], bool],
     skip_paths: "frozenset[str] | set[str] | None" = None,
 ) -> list[dict]:
+    """The planning job: the entry dicts of ``source`` on which
+    ``match_fn`` holds, in scan order (``_spark_tag_entries`` with a
+    yes/no tag)."""
+    return [e for e, _ in _spark_tag_entries(source, match_fn, skip_paths)]
+
+
+def _spark_tag_entries(
+    source: DataFrame,
+    tag_fn: Callable[[dict], int],
+    skip_paths: "frozenset[str] | set[str] | None" = None,
+) -> list[tuple[dict, int]]:
     """The planning job: mapInPandas over ``source``'s ``entry`` JSON
-    column, keeping rows where ``match_fn`` (a pure closure over
-    module-level matchers — picklable by construction) holds; rows
-    whose path is in ``skip_paths`` are dropped unseen (delta-chain
-    removes/replacements, re-planned driver-side). Returns surviving
-    entry dicts in scan order — O(matching) driver memory."""
+    column, keeping ``(entry, tag)`` for the rows whose ``tag_fn`` (a
+    pure closure over module-level matchers — picklable by
+    construction) is non-zero, e.g. a ``_verdict`` other than
+    ``_NONE``; rows whose path is in ``skip_paths`` are dropped unseen
+    (delta-chain removes/replacements, re-planned driver-side).
+    Returns the survivors in scan order — O(matching) driver memory."""
     skip = frozenset(skip_paths or ())
 
     def keep(batches):
         import pandas as pd
 
         for pdf in batches:
-            out = [
-                s
-                for s in pdf["entry"]
-                if (e := json.loads(s))["path"] not in skip and match_fn(e)
-            ]
-            yield pd.DataFrame({"entry": pd.Series(out, dtype="object")})
+            out, tags = [], []
+            for s in pdf["entry"]:
+                e = json.loads(s)
+                if e["path"] not in skip and (tag := int(tag_fn(e))):
+                    out.append(s)
+                    tags.append(tag)
+            yield pd.DataFrame(
+                {
+                    "entry": pd.Series(out, dtype="object"),
+                    "tag": pd.Series(tags, dtype="int64"),
+                }
+            )
 
-    rows = source.select("entry").mapInPandas(keep, "entry string").collect()
-    return [json.loads(r.entry) for r in rows]
+    rows = (
+        source.select("entry").mapInPandas(keep, "entry string, tag bigint").collect()
+    )
+    return [(json.loads(r.entry), r.tag) for r in rows]
 
 
 def _renamed(df: DataFrame, mapping: dict[str, str] | None) -> DataFrame:
@@ -2091,10 +2123,8 @@ class ManifestTable:
         entries: list[dict],
         predicates: Sequence[tuple],
         schema: StructType | None = None,
-        partition_by: Sequence[str] | None = None,
+        man: dict | None = None,
         utc: bool = True,
-        column_map: dict[str, str] | None = None,
-        partition_specs: Sequence[Sequence[str]] | None = None,
     ) -> tuple[list[dict], list[dict]]:
         """Split ``entries`` into (kept, pruned) under a conjunctive
         predicate spec — the read-time half of data skipping whose
@@ -2114,20 +2144,15 @@ class ManifestTable:
         cross-type comparisons never prune — the one evaluator every
         planner (reads, row verbs, MERGE, ``delete_keys``) shares.
 
+        ``man`` is the manifest the entries come from (its
+        ``partition_by``, ``partition_specs`` and ``column_map`` build
+        the ``_prune_ctx``; None reads as unpartitioned and unrenamed).
         ``utc`` gates BOTH timezone-sensitive prune families: the
         transform-dir reasoning (the Python mirror of days()/hours()
         derivation assumes UTC sessions) AND timestamp-kind stat
         probes (footer stats are wall-as-UTC micros; a non-UTC session
         interprets the probe literal in its own zone)."""
-        ctx = _prune_ctx(
-            {
-                "partition_by": partition_by,
-                "partition_specs": partition_specs,
-                "column_map": column_map,
-            },
-            utc,
-            schema,
-        )
+        ctx = _prune_ctx(man or {}, utc, schema)
         spec = ctx.spec(predicates)
         kept, pruned = [], []
         for e in entries:
@@ -2144,9 +2169,16 @@ class ManifestTable:
         normalized ``constraints``: ``_verdict`` says NONE, or — the one
         bloom pass of every planner, a driver-side layer over the
         verdict's survivors — a small ``in`` set over a non-partition
-        column tests negative in the file's bloom sidecar."""
-        if _verdict(entry, constraints, ctx) == _NONE:
-            return False
+        column tests negative in the file's bloom sidecar
+        (``_bloom_rejects``)."""
+        return _verdict(entry, constraints, ctx) != _NONE and not self._bloom_rejects(
+            entry, constraints
+        )
+
+    def _bloom_rejects(self, entry: dict, constraints: list[tuple]) -> bool:
+        """True when a small ``in`` set of the normalized
+        ``constraints`` over a non-partition column tests negative in
+        the entry's bloom sidecar: no row of the file can match."""
         part = entry.get("partition") or {}
         for col, op, v in constraints:
             if op != "in" or col in part:
@@ -2156,8 +2188,8 @@ class ManifestTable:
                 continue
             bloom = self._entry_blooms(entry).get(col)
             if bloom and _bloom_excludes(bloom, vals):
-                return False
-        return True
+                return True
+        return False
 
     def snapshot_where(
         self,
@@ -2435,26 +2467,36 @@ class ManifestTable:
         distributed job (same shape as ``_plan_read_entries``); below
         it, the driver loop. Both tiers return identical splits in
         manifest order."""
+        kept, cold, _ = self._tag_split(spark, entries, match_fn, op)
+        return kept, cold
+
+    def _tag_split(
+        self,
+        spark: SparkSession,
+        entries: list[dict],
+        tag_fn: Callable[[dict], int],
+        op: str,
+    ) -> tuple[list[dict], list[dict], list[int]]:
+        """``_split_candidates`` under a per-entry tag (zero = cold):
+        ``(kept, cold, tags)``, ``tags`` parallel to ``kept``."""
         if len(entries) >= _SPARK_PRUNE_MIN_FILES:
             mode = "distributed"
-            surv = {
-                e["path"]
-                for e in _spark_filter_entries(_entries_df(spark, entries), match_fn)
+            tag_of = {
+                e["path"]: t
+                for e, t in _spark_tag_entries(_entries_df(spark, entries), tag_fn)
             }
-            kept = [e for e in entries if e["path"] in surv]
-            cold = [e for e in entries if e["path"] not in surv]
         else:
             mode = "driver"
-            kept, cold = [], []
-            for e in entries:
-                (kept if match_fn(e) else cold).append(e)
+            tag_of = {e["path"]: t for e in entries if (t := int(tag_fn(e)))}
+        kept = [e for e in entries if e["path"] in tag_of]
+        cold = [e for e in entries if e["path"] not in tag_of]
         self.last_planning = {
             "mode": mode,
             "op": op,
             "candidates": len(entries),
             "kept": len(kept),
         }
-        return kept, cold
+        return kept, cold, [tag_of[e["path"]] for e in kept]
 
     def _prune_split(
         self,
@@ -2463,19 +2505,25 @@ class ManifestTable:
         spec: list[tuple],
         ctx: _PruneCtx,
         op: str,
-    ) -> tuple[list[dict], list[dict]]:
-        """(kept, cold) under the normalized ``spec``: the ``_verdict``
-        split at the tier ``_split_candidates`` picks (it records
-        ``last_planning``), then the one bloom pass
-        (``_entry_matches_possible``) as a driver loop over the
-        O(matching) survivors; cold lists verdict-cold files first."""
-        kept, cold = self._split_candidates(
-            spark, entries, lambda e: _verdict(e, spec, ctx) != _NONE, op
+    ) -> tuple[list[dict], list[dict], list[int]]:
+        """(kept, cold, verdicts) under the normalized ``spec``: the
+        ``_verdict`` split at the tier ``_tag_split`` picks (it
+        records ``last_planning``), then the one bloom pass
+        (``_bloom_rejects``) as a driver loop over the O(matching)
+        survivors. ``verdicts`` holds each kept file's ``_verdict``
+        (``_SOME`` or ``_ALL``), parallel to kept; cold lists
+        verdict-cold files first."""
+        kept, cold, tags = self._tag_split(
+            spark, entries, lambda e: _verdict(e, spec, ctx), op
         )
-        hot = []
-        for e in kept:
-            (hot if self._entry_matches_possible(e, spec, ctx) else cold).append(e)
-        return hot, cold
+        hot, verdicts = [], []
+        for e, v in zip(kept, tags):
+            if self._bloom_rejects(e, spec):
+                cold.append(e)
+            else:
+                hot.append(e)
+                verdicts.append(v)
+        return hot, cold, verdicts
 
     def _rewrite_candidates(
         self,
@@ -2494,9 +2542,10 @@ class ManifestTable:
         is the spec ``[(key, "in", values)]``) is judged by
         ``_verdict``: files it proves cold from partition values,
         spec-history dirs and key-range stats — or that a bloom
-        excludes (``_entry_matches_possible``) — are untouched, and
-        files it proves ALL match on every row (a file with a DV never
-        proves: its live rows are not what the footer describes). Any
+        excludes (``_bloom_rejects``) — are untouched, and files it
+        proves ALL match on every row (a file with a DV never proves:
+        its live rows are not what the footer describes) are proved;
+        ``_prune_split`` judges each file once for both. Any
         other ``where`` can't be reasoned about from metadata: every
         live file is a candidate. ``op`` tags ``last_planning``, whose
         ``mode`` is the verdict split's tier and whose ``candidates`` /
@@ -2506,14 +2555,13 @@ class ManifestTable:
             return [], live, []
         ctx = _prune_ctx(man, _session_utc(spark), schema)
         spec = ctx.spec(where.spec)
-        kept, _ = self._prune_split(spark, live, spec, ctx, op)
+        kept, _, verdicts = self._prune_split(spark, live, spec, ctx, op)
         mode = self.last_planning["mode"]
         hot = {e["path"] for e in kept}
-        proved, candidates, untouched = [], [], []
-        for e in live:
-            if e["path"] not in hot:
-                untouched.append(e)
-            elif not (e.get("dv") or e.get("dv_ref")) and _verdict(e, spec, ctx) == _ALL:
+        untouched = [e for e in live if e["path"] not in hot]
+        proved, candidates = [], []
+        for e, v in zip(kept, verdicts):
+            if v == _ALL and not (e.get("dv") or e.get("dv_ref")):
                 proved.append(e)
             else:
                 candidates.append(e)
@@ -4773,8 +4821,8 @@ class ManifestTable:
         3. BLOOM: when the source's distinct values on an indexed key
            fit the probe budget (the GDPR/correction shape), they
            become an ``in`` spec, judged like ``delete_keys``' one:
-           ``_verdict``, then the bloom pass of
-           ``_entry_matches_possible``. Files whose bloom excludes
+           ``_verdict``, then the one bloom pass, ``_bloom_rejects``.
+           Files whose bloom excludes
            every value are carried by reference — the prune that works
            where ranges can't (hash-scattered keys make every file's
            min/max span the domain).
@@ -4819,7 +4867,7 @@ class ManifestTable:
             bounds = _source_key_bounds(source, keys)
             if bounds:
                 spec = ctx.spec([(k, "between", b) for k, b in bounds.items()])
-                touched, cold = self._prune_split(
+                touched, cold, _ = self._prune_split(
                     spark, touched, spec, ctx, "merge-range"
                 )
                 tiers.append(dict(self.last_planning or {}))
@@ -4842,7 +4890,7 @@ class ManifestTable:
                 if len(vals) <= _BLOOM_PROBE_MAX and any(v is not None for v in vals):
                     probe.append((k, "in", vals))
             if probe:
-                touched, cold = self._prune_split(
+                touched, cold, _ = self._prune_split(
                     spark, touched, ctx.spec(probe), ctx, "merge-bloom"
                 )
                 tiers.append(dict(self.last_planning or {}))

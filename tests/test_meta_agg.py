@@ -105,3 +105,41 @@ def test_meta_agg_unknown_column_raises(spark, tmp_path):
 
     with pytest.raises(ValueError, match="nope"):
         t.meta_agg(spark, ["nope"])
+
+
+def test_meta_agg_nan_follows_spark_order_on_fused_route(spark, tmp_path):
+    """An all-NaN float file next to a finite one, under a CHECK (the
+    fused route). Spark orders NaN above every float: MIN is the finite
+    file's minimum and MAX is NaN, whichever file is folded first."""
+    nan = float("nan")
+
+    def same(a, b):
+        return a == b or (a != a and b != b)
+
+    for nan_ks in ((1, 2, 3), (4, 5, 6)):
+        t = ManifestTable(str(tmp_path / f"nan{nan_ks[0]}"))
+        rows = [
+            (k, None if k == nan_ks[2] else nan) if k in nan_ks
+            else (k, 2.5 if k % 2 else -1.0)
+            for k in range(1, 7)
+        ]
+        t.overwrite(
+            spark.createDataFrame(rows, "k bigint, x double")
+            .repartitionByRange(2, "k").sortWithinPartitions("k"),
+            constraints={"kpos": "k > 0"},
+        )
+        assert t.last_write_route == "fused"
+        truth = _scan_truth(t.snapshot(spark), ["x"])
+        assert truth["mn_x"] == -1.0 and truth["mx_x"] != truth["mx_x"]
+        got = t.meta_agg(spark, ["x"])["columns"]["x"]
+        assert got["metadata_only"] is True
+        assert got["non_null"] == truth["nn_x"] == 5
+        assert same(got["min"], truth["mn_x"]) and same(got["max"], truth["mx_x"])
+        files = t._read_manifest(t.latest_version())["files"]
+        assert len(files) == 2
+        for order in (files, files[::-1]):
+            acc = tablemod._meta_acc_new({"x": "double"})
+            for e in order:
+                tablemod._meta_acc_update(acc, e, {"x": "double"})
+            a = acc["cols"]["x"]
+            assert a["mm_ok"] and a["min"] == -1.0 and a["max"] != a["max"]

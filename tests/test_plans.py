@@ -261,9 +261,7 @@ def test_evolved_read_prunes_both_layouts(spark, sf_dir):
     assert legacy and current  # genuinely mixed layouts
     # re-plan explicitly to get the per-entry kept set
     kept, pruned = t._prune_by_key_stats(
-        man["files"], spec, t.snapshot(spark).schema,
-        partition_by=man["partition_by"],
-        partition_specs=man.get("partition_specs"),
+        man["files"], spec, t.snapshot(spark).schema, man=man
     )
     pruned_legacy = [e for e in pruned if "ts_day" in e["partition"]]
     pruned_current = [e for e in pruned if "ts_month" in e["partition"]]

@@ -18,6 +18,8 @@ comparison, and a bigint meets a double through a double cast.
 - ``test_fused_route_nan_file_is_never_pruned`` pins the end-to-end
   repro of the NaN hole: pyarrow leaves NaN out of float min/max, so a
   fused-route file holding [NaN, NaN, -1.5] used to read -1.5..-1.5.
+- ``test_rewrite_planner_judges_alike_on_both_tiers``: the row verbs'
+  planner reads each file's verdict from the split, at either tier.
 - ``test_twin_routes_count_like_a_scan`` (slow tier) runs the same spec
   generator over Spark-written tables, unguarded (native writer) and
   under a trivially true CHECK (fused writer).
@@ -234,6 +236,32 @@ def test_fused_route_nan_file_is_never_pruned(spark, tmp_path):
     assert sorted(r.k for r in snap.filter("x >= 4.5").collect()) == [1, 2]
     t.delete_where(spark, [("x", "=", -1.5)])
     assert sorted(r.k for r in t.snapshot(spark).collect()) == [1, 2]
+
+
+def test_rewrite_planner_judges_alike_on_both_tiers(spark, tmp_path, monkeypatch):
+    """The row verbs' planner takes each kept file's verdict from the
+    split itself: the driver loop and the distributed job give the same
+    (proved, candidates, untouched) over a range-clustered table."""
+    import etl_job_spark.table as tablemod
+
+    t = ManifestTable(str(tmp_path / "tiers"))
+    t.overwrite(
+        spark.range(0, 800).selectExpr("id as k", "id % 7 as v")
+        .repartitionByRange(8, "k").sortWithinPartitions("k")
+    )
+    man = t._read_manifest(t.latest_version())
+    where = tablemod._where_form([("k", ">=", 250)])
+    got = {}
+    for tier, gate in (("driver", 10**9), ("distributed", 4)):
+        monkeypatch.setattr(tablemod, "_SPARK_PRUNE_MIN_FILES", gate)
+        split = t._rewrite_candidates(
+            spark, man, t._manifest_schema(man), where, "update-allmatch"
+        )
+        assert t.last_planning["mode"] == tier
+        got[tier] = [sorted(e["path"] for e in part) for part in split]
+    proved, candidates, untouched = got["driver"]
+    assert (len(proved), len(candidates), len(untouched)) == (5, 1, 2)
+    assert got["distributed"] == got["driver"]
 
 
 # -- slow tier: the same specs over Spark-written tables ---------------
