@@ -19,11 +19,17 @@ the physical plan:
 - **SimHash**: 32-bit signature from per-token md5 bit votes weighted
   by term frequency; Hamming-close signatures → near-dups. Signature
   computation is one explode + two groupBys, all integer arithmetic.
+
+Wide column trees (the K minhash aggregates, the band arrays, SimHash's
+33 aggregates and 32-term vote) are written as SQL expression strings:
+every ``Column`` call is a py4j round trip plus PySpark's call-site
+capture, so building them call by call cost thousands of driver round
+trips per batch before any job ran, where a string parses in one.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from etl_job_spark.operators.text import fingerprint, tokens
@@ -121,7 +127,7 @@ def minhash_signatures(doc_shingles: DataFrame, num_hashes: int = 12) -> DataFra
     versus K·|docs| rows for the explode-seeds formulation this
     replaced (2× wall-clock at sf0.1, and the gap widens with K)."""
     mins = [
-        F.min(F.md5(F.concat_ws(":", F.lit(str(s)), F.col("shingle")))).alias(f"mh_{s}")
+        F.expr(f"min(md5(concat_ws(':', '{s}', shingle))) AS mh_{s}")
         for s in range(num_hashes)
     ]
     return doc_shingles.groupBy("doc_id").agg(*mins)
@@ -133,21 +139,13 @@ def signature_bands(
     """Band the wide signature (band b = minhashes [b·size, (b+1)·size))
     into one bucket string per band — pure column concat + explode, no
     shuffle: (doc_id, band, sig)."""
-    n_bands = num_hashes // band_size
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.concat_ws(
-                    "|", *[F.col(f"mh_{b * band_size + j}") for j in range(band_size)]
-                ).alias("sig"),
-            )
-            for b in range(n_bands)
-        ]
+    band_structs = ", ".join(
+        f"struct({b} AS band, concat_ws('|', "
+        + ", ".join(f"mh_{b * band_size + j}" for j in range(band_size))
+        + ") AS sig)"
+        for b in range(num_hashes // band_size)
     )
-    return signatures.select("doc_id", F.explode(band_structs).alias("x")).select(
-        "doc_id", "x.band", "x.sig"
-    )
+    return signatures.selectExpr("doc_id", f"inline(array({band_structs}))")
 
 
 def lsh_candidate_pairs(
@@ -157,11 +155,11 @@ def lsh_candidate_pairs(
     ever pair, the LSH guarantee that candidate generation is
     sub-quadratic."""
     bands = signature_bands(signatures, band_size, num_hashes)
-    a = bands.select(F.col("doc_id").alias("doc_a"), "band", "sig")
-    b = bands.select(F.col("doc_id").alias("doc_b"), "band", "sig")
+    a = bands.selectExpr("doc_id AS doc_a", "band", "sig")
+    b = bands.selectExpr("doc_id AS doc_b", "band", "sig")
     return (
         a.join(b, ["band", "sig"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
+        .where("doc_a < doc_b")
         .select("doc_a", "doc_b")
         .distinct()
     )
@@ -218,33 +216,26 @@ def simhash_pairs(signatures: DataFrame, max_hamming: int = 3) -> DataFrame:
     splits into 4 bytes; two signatures within Hamming distance 3 MUST
     agree on at least one whole byte (pigeonhole), so candidates only
     form inside shared (band, byte) buckets — sub-quadratic, zero
-    false negatives for the distance bound. Verify = popcount(xor)."""
-    bands = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.expr(f"shiftright(simhash, {8 * b}) & 255").alias("byte"),
-            )
-            for b in range(4)
-        ]
+    false negatives for the distance bound. Verify = popcount(xor).
+
+    A pair sharing several bytes meets in several buckets, so the
+    bucket join repeats it; the distance is a function of the pair, so
+    it is computed and filtered on the joined rows and the ``distinct``
+    runs over ``(doc_a, doc_b, hamming)`` only — the signatures never
+    cross that exchange, and pairs past the bound never reach it."""
+    bands = ", ".join(
+        f"struct({b} AS band, shiftright(simhash, {8 * b}) & 255 AS `byte`)"
+        for b in range(4)
     )
-    banded = signatures.select("doc_id", "simhash", F.explode(bands).alias("x")).select(
-        "doc_id", "simhash", "x.band", "x.byte"
-    )
-    a = banded.select(
-        F.col("doc_id").alias("doc_a"), F.col("simhash").alias("sig_a"), "band", "byte"
-    )
-    b = banded.select(
-        F.col("doc_id").alias("doc_b"), F.col("simhash").alias("sig_b"), "band", "byte"
-    )
+    banded = signatures.selectExpr("doc_id", "simhash", f"inline(array({bands}))")
+    a = banded.selectExpr("doc_id AS doc_a", "simhash AS sig_a", "band", "`byte`")
+    b = banded.selectExpr("doc_id AS doc_b", "simhash AS sig_b", "band", "`byte`")
     return (
         a.join(b, ["band", "byte"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b", "sig_a", "sig_b")
+        .where("doc_a < doc_b")
+        .selectExpr("doc_a", "doc_b", "cast(bit_count(sig_a ^ sig_b) as bigint) AS hamming")
+        .where(f"hamming <= {max_hamming}")
         .distinct()
-        .withColumn("hamming", F.expr("bit_count(sig_a ^ sig_b)").cast("bigint"))
-        .filter(F.col("hamming") <= max_hamming)
-        .select("doc_a", "doc_b", "hamming")
     )
 
 
@@ -255,13 +246,28 @@ def connected_components(
     where cluster_id = min doc_id reachable through pair edges —
     min-label propagation iterated to fixpoint.
 
-    The loop is DataFrame-only (join + groupBy per round) with a
-    driver-side convergence check; rounds needed = cluster diameter,
-    which for dedup graphs is tiny (duplicates of one document link to
-    a common near-neighbor). Each round's shuffle is keyed on doc_id,
-    so partitioning is stable across iterations. localCheckpoint
+    The loop is DataFrame-only with a driver-side convergence check;
+    rounds needed = cluster diameter, which for dedup graphs is tiny
+    (duplicates of one document link to a common near-neighbor). The
+    first propagation is the start itself: one groupBy of the edges
+    gives every incident node the min of its own id and its
+    neighbours' ids, planned into the first round instead of
+    materialized on its own. Each round is ONE groupBy(doc_id) over a
+    union of the current labels (carrying their value as ``old_cid``)
+    and the labels propagated along the edges (``edges ⋈ labels``,
+    ``old_cid`` NULL): min(cluster_id) is the new label and
+    max(old_cid) the old one, so the changed-label count is an
+    ``observe()`` metric on that same aggregate — no label-diff join,
+    no second pass. The shuffle is keyed on doc_id, so partitioning is
+    stable across rounds. Every round ends in a localCheckpoint, which
     truncates the growing lineage — without it, round k replans rounds
-    1..k-1 (iterative algorithms on Spark MUST checkpoint).
+    1..k-1 (iterative algorithms on Spark MUST checkpoint) — and
+    releases the checkpoint it superseded once its own has
+    materialized.
+
+    ``max_iter`` counts the loop rounds after that start, each ending
+    in a convergence check: labels that settle in the start still take
+    one round to prove it, and a path of diameter D takes D rounds.
 
     ``nodes``: one doc_id column; ``pairs``: (doc_a, doc_b) edges.
     """
@@ -273,12 +279,11 @@ def connected_components(
     # filter ran once per direction. Exploding both orientations from
     # each pair row reads the subtree once; distinct() sees the same
     # 2|pairs| rows either way.
-    both_dirs = F.array(
-        F.struct(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")),
-        F.struct(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")),
-    )
     edges = (
-        pairs.select(F.explode(both_dirs).alias("e"))
+        pairs.selectExpr(
+            "explode(array(struct(doc_a AS src, doc_b AS dst),"
+            " struct(doc_b AS src, doc_a AS dst))) AS e"
+        )
         .select("e.src", "e.dst")
         .distinct()
         .localCheckpoint()
@@ -286,40 +291,34 @@ def connected_components(
     # only nodes incident to an edge can ever change label; singletons
     # (the overwhelming majority of a real corpus) skip the loop and
     # rejoin at the end with their own id
-    incident = edges.select(F.col("src").alias("doc_id")).distinct()
-    singletons = nodes.select("doc_id").join(incident, "doc_id", "left_anti")
-    labels = incident.select("doc_id", F.col("doc_id").alias("cluster_id")).localCheckpoint()
-    for _ in range(max_iter):
-        neighbor_min = (
-            edges.join(labels.withColumnRenamed("doc_id", "dst"), "dst")
-            .groupBy("src")
-            .agg(F.min("cluster_id").alias("nbr_min"))
-            .withColumnRenamed("src", "doc_id")
-        )
-        # ONE job per round: the changed-label count rides the
-        # checkpoint materialization as an observe() metric instead of
-        # a separate label-diff join+count (which re-scanned both label
-        # tables). Checkpoint EVERY round — iterative DataFrame loops
-        # must truncate lineage or round k replans rounds 1..k-1.
-        from pyspark.sql import Observation
-
+    singletons = nodes.select("doc_id").join(
+        edges.selectExpr("src AS doc_id"), "doc_id", "left_anti"
+    )
+    labels = (
+        edges.groupBy("src")
+        .agg(F.expr("least(src, min(dst)) AS cluster_id"))
+        .withColumnRenamed("src", "doc_id")
+    )
+    for i in range(max_iter):
         obs = Observation()
+        propagated = edges.join(labels.withColumnRenamed("doc_id", "dst"), "dst").selectExpr(
+            "src AS doc_id", "cluster_id", "NULL AS old_cid"
+        )
         new_labels = (
-            labels.withColumnRenamed("cluster_id", "old_cid")
-            .join(neighbor_min, "doc_id", "left")
-            .select(
-                "doc_id",
-                F.col("old_cid"),
-                F.least(F.col("old_cid"), F.coalesce("nbr_min", F.col("old_cid"))).alias(
-                    "cluster_id"
-                ),
-            )
-            .observe(obs, F.sum((F.col("cluster_id") != F.col("old_cid")).cast("long")).alias("changed"))
+            labels.selectExpr("doc_id", "cluster_id", "cluster_id AS old_cid")
+            .unionByName(propagated)
+            .groupBy("doc_id")
+            .agg(F.expr("min(cluster_id) AS cluster_id"), F.expr("max(old_cid) AS old_cid"))
+            .observe(obs, F.expr("sum(cast(cluster_id != old_cid AS long)) AS changed"))
             .select("doc_id", "cluster_id")
             .localCheckpoint()
         )
-        changed = obs.get["changed"] or 0
+        # free the superseded checkpoint's blocks now, not whenever the
+        # JVM collects its RDD (the start labels are a plan, not one)
+        if i:
+            labels._jdf.queryExecution().logical().rdd().unpersist(False)
         labels = new_labels
+        changed = obs.get["changed"] or 0
         if changed == 0:
             break
     else:
@@ -331,9 +330,7 @@ def connected_components(
             f"({changed} labels still changing); raise max_iter or use "
             "connected_components_star for long-diameter graphs"
         )
-    return labels.unionByName(
-        singletons.select("doc_id", F.col("doc_id").alias("cluster_id"))
-    )
+    return labels.unionByName(singletons.selectExpr("doc_id", "doc_id AS cluster_id"))
 
 
 def simhash_signatures(docs: DataFrame, text_col: str = "text", bits: int = 32) -> DataFrame:
@@ -357,25 +354,22 @@ def simhash_signatures(docs: DataFrame, text_col: str = "text", bits: int = 32) 
         # (32 bits); a wider request would silently index negative bit
         # positions and produce garbage signatures
         raise ValueError(f"simhash bits must be in 1..32, got {bits}")
-    occ = docs.select("doc_id", F.explode(tokens(text_col)).alias("tok")).select(
+    occ = docs.select("doc_id", F.explode(tokens(text_col)).alias("tok")).selectExpr(
         "doc_id",
         # value of the first 8 md5 hex chars; nibble c of the hex string
         # occupies bits [(7-c)*4, (7-c)*4 + 4) of this integer
-        F.expr("cast(conv(substring(md5(tok), 1, 8), 16, 10) as bigint)").alias("w"),
+        "cast(conv(substring(md5(tok), 1, 8), 16, 10) as bigint) AS w",
     )
-    aggs = [F.count(F.lit(1)).alias("n")]
-    for j in range(bits):
-        # same bit mapping as the oracle: hex char (j div 4), bit (j%4)
-        # of its nibble value → global bit (7 - j div 4)*4 + (j%4)
-        b = (7 - j // 4) * 4 + (j % 4)
-        aggs.append(F.sum(F.expr(f"shiftright(w, {b}) & 1")).alias(f"c{j}"))
-    counts = occ.groupBy("doc_id").agg(*aggs)
-    sim = None
-    for j in range(bits):
-        # vote sign: 2*c_j - n > 0  ⟺  2*c_j > n  (ties → bit 0)
-        term = F.when(2 * F.col(f"c{j}") > F.col("n"), F.lit(1 << j)).otherwise(F.lit(0))
-        sim = term if sim is None else sim + term
-    return counts.select("doc_id", sim.cast("bigint").alias("simhash"))
+    # same bit mapping as the oracle: hex char (j div 4), bit (j%4) of
+    # its nibble value → global bit (7 - j div 4)*4 + (j%4)
+    aggs = [
+        F.expr(f"sum(shiftright(w, {(7 - j // 4) * 4 + j % 4}) & 1) AS c{j}")
+        for j in range(bits)
+    ]
+    counts = occ.groupBy("doc_id").agg(F.expr("count(1) AS n"), *aggs)
+    # vote sign: 2*c_j - n > 0  ⟺  2*c_j > n  (ties → bit 0)
+    vote = " + ".join(f"CASE WHEN 2 * c{j} > n THEN {1 << j} ELSE 0 END" for j in range(bits))
+    return counts.selectExpr("doc_id", f"cast({vote} as bigint) AS simhash")
 
 
 def connected_components_star(

@@ -1679,19 +1679,25 @@ def _stats_verdict(entry: dict, col: str, op: str, v, kind, utc: bool) -> int:
     """A constraint against the footer facts of ``col``: ``[min, max]``
     over its non-NULL values, its NULL count and the file's row count.
     A comparison proves ALL only with a RECORDED zero NULL count (a
-    NULL row satisfies no comparison); parquet's possibly-truncated
+    NULL row satisfies no comparison), and a recorded all-NULL file
+    excludes every comparison and IN set; parquet's possibly-truncated
     binary min/max stay sound both ways, truncation only widens the
     range. An IN set excludes when every member falls outside the
     range — past ``_BLOOM_PROBE_MAX`` members only when the whole set
-    sits on one side of it (the set's envelope)."""
+    sits on one side of it (the set's envelope). Stats are keyed by
+    physical column, a name no later column ever takes over, so a
+    recorded NULL count is what every read of the file sees."""
     st = (entry.get("stats") or {}).get(col) or {}
     n, rows = st.get("nulls"), entry.get("rows") or 0
+    all_null = n is not None and rows > 0 and n >= rows
     if op in ("is_null", "not_null"):
         if n is None:
             return _SOME
         if op == "is_null":
-            return _NONE if n == 0 else _ALL if n >= rows else _SOME
-        return _NONE if rows and n >= rows else _ALL if n == 0 else _SOME
+            return _NONE if n == 0 else _ALL if all_null else _SOME
+        return _NONE if all_null else _ALL if n == 0 else _SOME
+    if all_null:
+        return _NONE
     lo, hi = st.get("min"), st.get("max")
     if op == "in":
         ords = [_ordered(_stat_probe_encode(x, kind, utc), lo, hi) for x in v]

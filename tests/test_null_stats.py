@@ -137,8 +137,8 @@ def test_range_probe_on_nulls_only_stats_never_crashes(spark, tmp_path):
         spark.range(0, 10).selectExpr("id as k", "cast(null as bigint) as m")
         .coalesce(1)
     )
-    # m's stats entry is nulls-only; every planner surface must treat
-    # its range as unknown (keep) and the residual filter yields empty
+    # m's stats entry is nulls-only; every planner surface must read
+    # it without a range (the all-NULL file is skipped) and yield empty
     assert t.snapshot_where(spark, [("m", ">", 5)]).count() == 0
     assert t.snapshot_where(spark, [("m", "in", [1, 2])]).count() == 0
     assert t.snapshot_where(spark, [("m", "is_null"), ("k", "<", 3)]).count() == 3

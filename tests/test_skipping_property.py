@@ -15,6 +15,8 @@ comparison, and a bigint meets a double through a double cast.
   ``fold_float_stats``: float manifest stats with NaN as the max, the
   shape parquet-java records), raw partition constants, and
   transform-partitioned files.
+- ``test_all_null_file_is_excluded_by_every_comparison``: a recorded
+  all-NULL file is NONE for every comparison and IN set.
 - ``test_fused_route_nan_file_is_never_pruned`` pins the end-to-end
   repro of the NaN hole: pyarrow leaves NaN out of float min/max, so a
   fused-route file holding [NaN, NaN, -1.5] used to read -1.5..-1.5.
@@ -182,7 +184,14 @@ def case(draw):
         rows = [pv] * draw(st.integers(1, 4))
         entry = {"rows": len(rows), "stats": {}, "partition": {"c": _spell(pv, kind)}}
     else:
-        rows = draw(st.lists(value, min_size=1, max_size=4))
+        # all-NULL files on their own branch: a list of mixed draws
+        # rarely comes out all NULL past one row
+        rows = draw(
+            st.one_of(
+                st.lists(value, min_size=1, max_size=4),
+                st.lists(st.none(), min_size=1, max_size=4),
+            )
+        )
         if flavour == "transform":
             spec = draw(st.sampled_from(TRANSFORMS[kind]))
             first = _transform_dir(spec, rows[0])
@@ -198,6 +207,7 @@ def case(draw):
 
 # the NaN hole's own file, pinned besides whatever the search finds
 _NAN_ROWS = [NAN, NAN, -1.5]
+_NULL_ROWS = [None, None, None]
 
 
 @settings(
@@ -206,6 +216,7 @@ _NAN_ROWS = [NAN, NAN, -1.5]
 @given(case())
 @example(("double", _NAN_ROWS, _file_entry(_NAN_ROWS, "double"), {}, [("c", "=", -1.5)]))
 @example(("double", _NAN_ROWS, _file_entry(_NAN_ROWS, "double"), {}, [("c", ">=", 4.5)]))
+@example(("bigint", _NULL_ROWS, _file_entry(_NULL_ROWS, "bigint"), {}, [("c", "in", [1, 2])]))
 def test_verdict_is_sound_on_rows(c):
     kind, rows, entry, tmap, spec = c
     ctx = _PruneCtx({"c": kind}, tmap, True, {})
@@ -218,6 +229,27 @@ def test_verdict_is_sound_on_rows(c):
         assert not any(hits), (rows, entry, spec)
     if verdict == _ALL:
         assert all(hits), (rows, entry, spec)
+
+
+def test_all_null_file_is_excluded_by_every_comparison():
+    """A file whose recorded NULL count equals its row count holds no
+    row that a comparison or an IN set matches: the verdict is NONE,
+    so no prune opens it, while IS NULL is proved for every row."""
+    probes = {"bigint": 5, "double": 1.5, "string": "a", "date": dt.date(1970, 1, 1)}
+    for kind, v in probes.items():
+        entry = _file_entry(_NULL_ROWS, kind)
+        assert entry["stats"]["c"] == {"nulls": 3}
+        ctx = _PruneCtx({"c": kind}, {}, True, {})
+        for spec in (
+            [("c", op, v) for op in ("=", "<", "<=", ">", ">=")]
+            + [("c", "in", [v]), ("c", "between", (v, v)), ("c", "not_null")]
+        ):
+            assert _verdict(entry, ctx.spec([spec]), ctx) == _NONE, (kind, spec)
+        assert _verdict(entry, ctx.spec([("c", "is_null")]), ctx) == _ALL
+    # a hand-built entry alike; one without a NULL count proves nothing
+    ctx = _PruneCtx({"x": "double"}, {}, True, {})
+    assert _verdict({"rows": 3, "stats": {"x": {"nulls": 3}}}, [("x", ">", 5.0)], ctx) == _NONE
+    assert _verdict({"rows": 3, "stats": {"x": {}}}, [("x", ">", 5.0)], ctx) != _NONE
 
 
 def test_fused_route_nan_file_is_never_pruned(spark, tmp_path):

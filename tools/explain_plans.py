@@ -31,8 +31,6 @@ def _cc_edges_frame(spark, sf):
     reproduced WITHOUT the localCheckpoint so the pair pipeline is
     visible in the plan (same expressions as operators/dedup.py
     connected_components's symmetrization)."""
-    from pyspark.sql import functions as F
-
     from etl_job_spark.operators import dedup
     from etl_job_spark.plans import llm_ops
 
@@ -41,11 +39,14 @@ def _cc_edges_frame(spark, sf):
     sigs = dedup.minhash_signatures(sh, num_hashes=12)
     cands = dedup.lsh_candidate_pairs(sigs, band_size=3)
     pairs = dedup.verify_pairs(cands, sh, llm_ops.JACCARD_THRESHOLD)
-    both_dirs = F.array(
-        F.struct(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")),
-        F.struct(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")),
+    return (
+        pairs.selectExpr(
+            "explode(array(struct(doc_a AS src, doc_b AS dst),"
+            " struct(doc_b AS src, doc_a AS dst))) AS e"
+        )
+        .select("e.src", "e.dst")
+        .distinct()
     )
-    return pairs.select(F.explode(both_dirs).alias("e")).select("e.src", "e.dst").distinct()
 
 
 def main() -> None:
